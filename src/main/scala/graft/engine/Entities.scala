@@ -1,5 +1,7 @@
 package graft.engine
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -33,8 +35,9 @@ object Entities {
       .dropDuplicates()
   }
 
+  /** Every entity, in declaration order. */
   def splitAll(silver: DataFrame, specs: Seq[EntitySpec]): Map[String, DataFrame] =
-    specs.map(s => s.name -> conform(silver, s)).toMap
+    ListMap.from(specs.map(s => s.name -> conform(silver, s)))
 
   private def defaultLit(c: ColSpec) = c.default match {
     case d: Double if c.dtype == "int64" => lit(d.toLong)

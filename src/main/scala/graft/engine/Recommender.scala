@@ -43,18 +43,21 @@ object Recommender {
     // sorts and three reads of the incidence exchange and was the
     // bench's #1 cost in the full-suite run (37.2 s, anti-scaling 0.18
     // at 32 cores). Here the pairs generate LOCALLY from the sorted
-    // array — no join, no sort, bounded per-task state (≤ maxBasket
-    // longs per group; power-baskets above the cap drop first, same
-    // contract). `distinct()` upstream makes the array a strictly
-    // increasing set, so the tail slice after each position is exactly
-    // the i < j pair set of the old θ-join.
+    // array — no self-join, no sort. `distinct()` upstream makes the
+    // array a strictly increasing set, so the tail slice after each
+    // position is exactly the i < j pair set of the old θ-join.
+    // The cap applies before the collect (count + left-semi pre-filter),
+    // so a power basket never builds its item array: per-group state
+    // stays ≤ maxBasket longs whatever the input holds.
     // spreadExpand: the pair stage below writes ~30× its input — without
     // the pin AQE coalesces the small basket shuffle to ~3 partitions
     // and serializes the expansion (measured: 3 tasks / 4.4 s at 32
     // cores); identity at scale (static scan-splits guard)
-    val basket = Partitioning.spreadExpand(inc.groupBy(col("b"))
-      .agg(sort_array(collect_list(col("i"))).as("items"))
-      .where(size(col("items")) <= maxBasket))
+    val capped = inc.groupBy(col("b")).agg(count(lit(1)).as("n"))
+      .where(col("n") <= maxBasket)
+    val basket = Partitioning.spreadExpand(
+      inc.join(capped, Seq("b"), "left_semi").groupBy(col("b"))
+        .agg(sort_array(collect_list(col("i"))).as("items")))
     val ni = basket.select(explode(col("items")).as("i"))
       .groupBy(col("i")).agg(count(lit(1)).as("n"))
     val co = basket

@@ -51,9 +51,11 @@ object Sources {
     df.select(cols: _*)
   }
 
-  /** S7: parquet zone scan (`filestorage_helper.py:135-136`). */
-  def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  /** S7: parquet zone scan (`filestorage_helper.py:135-136`). Schema
+    * optional: inferred from the footers when absent (one Spark job). */
+  def parquet(spark: SparkSession, path: String,
+      schema: Option[StructType] = None): DataFrame =
+    schema.fold(spark.read)(spark.read.schema).parquet(path)
 
   /** Parquet scan with schema evolution: batches written before a column
     * was added coexist with newer ones — the merged schema is the union,

@@ -1,7 +1,9 @@
 package graft.pipeline
 
+import org.apache.spark.GraftListenerBus
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.engine._
 
@@ -17,9 +19,22 @@ import graft.engine._
   * batch-stamped (E11); transform runs the reference's fixed chain
   * (`transform.py:382-409`): cast → impute → derive → split → stats; load
   * appends only new keys (J3/J4). Zone writes are the observable contract
-  * (files per zone, `{batch_id}` partitioned); each stage boundary is an
-  * explicit materialization barrier exactly like the reference's
-  * bronze write→reload (`extract.py:539-561`).
+  * (files per zone, `{batch_id}` partitioned). Extract re-reads each zone
+  * it wrote, like the reference's bronze write→reload
+  * (`extract.py:539-561`).
+  *
+  * Actions that do not depend on each other run at the same time, one
+  * thread each, and each call returns only when all of them have ended:
+  *   - `transform`: after cast inference and imputation (in order), every
+  *     gold entity write and the statistics branch (collect, then write);
+  *   - `load`: every entity's read → anti-join → dedup → append, each into
+  *     its own target directory. The parquet target has no foreign keys,
+  *     so the reference's FK order (`load.py:181-212`) constrains nothing
+  *     here. A JDBC target with FK constraints must keep that order
+  *     (`Sinks.jdbcLoadOrdered`).
+  * The threads inherit the caller's Spark local properties (job group,
+  * description, tags) and active session, so cancellation and job
+  * attribution by local property cover every job a call starts.
   */
 object EtlPipeline {
 
@@ -41,27 +56,23 @@ object EtlPipeline {
     * the zone — the reference's memory barrier). */
   def extract(spark: SparkSession, sfDir: String, zones: Zones,
       batchId: String): DataFrame = {
-    val customer = assertRequired(
-      Tables.load(spark, sfDir, "customer"), Seq("c_custkey", "c_name"))
-    val orders = Tables.load(spark, sfDir, "orders")
-    val lineitem = Tables.load(spark, sfDir, "lineitem")
-
-    // J1: fact ⋈ small dim (broadcast) with E8 suffix namespacing
-    val e = Names.withSuffix(orders, "_enedis")
-    val b = Names.withSuffix(customer, "_ban")
-    val merged = Joins.innerEqui(e, b, "o_custkey_enedis", "c_custkey_ban",
-      broadcastRight = true)
+    val merged = enedisBan(spark, sfDir)
     Sinks.parquetGzip(merged, s"${zones.bronze}/merged_enedis_ban")
 
     // J2: ⟕ second source on string-cast keys + dedup (per-order rollup
     // keeps the join 1:1, as the reference's ademe-by-id_ban is)
+    val lineitem = Tables.load(spark, sfDir, "lineitem")
     val perOrder = lineitem.groupBy(col("l_orderkey")).agg(
       sum(col("l_quantity").cast("decimal(18,2)")).cast("double")
         .as("quantite_totale_ademe"),
       sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
         .cast("decimal(18,2)")).cast("double").as("montant_net_ademe"),
       count(lit(1)).cast("double").as("nb_lignes_ademe"))
-    val bronze = Sources.parquet(spark, s"${zones.bronze}/merged_enedis_ban")
+    // bronze is unpartitioned, so the schema just written is the one its
+    // footers hold; passing it skips the footer-inference job. Silver stays
+    // inferred: its `batch_id` type comes from partition inference.
+    val bronze = Sources.parquet(spark, s"${zones.bronze}/merged_enedis_ban",
+      Some(footerSchema(merged)))
     val silver = Joins.leftOuterOnStringKey(bronze, perOrder,
       "o_orderkey_enedis", "l_orderkey")
     val stamped = Derive.withBatchId(Names.sortColumns(silver), batchId)
@@ -69,6 +80,22 @@ object EtlPipeline {
       partitionByCols = Seq("batch_id"))
     Sources.parquet(spark, s"${zones.silver}/silver_data")
   }
+
+  /** J1: orders ⋈ customer (broadcast), E8 suffix-namespaced — the rows
+    * of the bronze zone. */
+  private[graft] def enedisBan(spark: SparkSession, sfDir: String): DataFrame = {
+    val customer = assertRequired(
+      Tables.load(spark, sfDir, "customer"), Seq("c_custkey", "c_name"))
+    val e = Names.withSuffix(Tables.load(spark, sfDir, "orders"), "_enedis")
+    val b = Names.withSuffix(customer, "_ban")
+    Joins.innerEqui(e, b, "o_custkey_enedis", "c_custkey_ban",
+      broadcastRight = true)
+  }
+
+  /** The schema a parquet write of `df` leaves in its footers: every
+    * field nullable. */
+  private[graft] def footerSchema(df: DataFrame): StructType =
+    StructType(df.schema.map(_.copy(nullable = true)))
 
   /** Gold entity declarations (shape of `schema_golden_data`): column
     * subsets + defaults for declared-but-absent columns. */
@@ -119,30 +146,32 @@ object EtlPipeline {
     // gold model from the bundled config
     val entities = Entities.splitAll(derived, entitySpecs)
 
-    // 5. per-label paired statistics (A5-A9) → tests_statistiques entity
-    val stats = graft.engine.Stats.dpeStatistics(derived, "etiquette",
-      "conso_kwh_m2", "montant_net_ademe", batchId)
-
-    val all = entities + ("tests_statistiques" -> stats)
     // zone file naming mirrors the reference's `{entity}_{date}_{batch_id}`
     // contract (`transform.py:308`) — the loader locates the same run by
     // reconstructing the name from (batchId, clock)
-    all.foreach { case (name, df) =>
+    def write(name: String, df: DataFrame): (String, DataFrame) = {
       Sinks.parquetGzip(df, s"${zones.gold}/${Dates.zoneFileName(name, batchId, clock)}")
+      name -> df
     }
-    all
+    // 5. the gold writes and the per-label paired statistics (A5-A9) →
+    // tests_statistiques entity, all at once
+    concurrently(entities.toSeq.map { case (name, df) => () => write(name, df) } :+
+      (() => write("tests_statistiques", graft.engine.Stats.dpeStatistics(
+        derived, "etiquette", "conso_kwh_m2", "montant_net_ademe", batchId)))
+    ).toMap
   }
 
-  /** Loader (`load.py:181-212`): FK-ordered idempotent append of each gold
-    * entity into the serving store — here a parquet target standing in for
-    * the reference's Postgres (same anti-join-then-append contract as
-    * `Sinks.jdbcAppendNew`). */
+  /** Loader (`load.py:181-212`): idempotent append of each gold entity
+    * into the serving store — here a parquet target standing in for the
+    * reference's Postgres (same anti-join-then-append contract as
+    * `Sinks.jdbcAppendNew`). The entities load concurrently; see the
+    * object doc for why no FK order applies. */
   def load(spark: SparkSession, zones: Zones, targetDir: String,
       keys: Map[String, Seq[String]], batchId: String,
       clock: java.time.Clock = java.time.Clock.systemUTC()): Unit = {
-    val order = Seq("adresses", "logements", "tests_statistiques")
+    val entities = Seq("adresses", "logements", "tests_statistiques")
       .filter(keys.contains)
-    order.foreach { entity =>
+    concurrently(entities.map { entity => () =>
       val incoming = Sources.parquet(spark,
         s"${zones.gold}/${Dates.zoneFileName(entity, batchId, clock)}")
       val target = s"$targetDir/$entity"
@@ -162,6 +191,38 @@ object EtlPipeline {
       val deduped = LoadDedup.dedupKeepFirst(fresh, keys(entity),
         orderBy = fresh.columns.sorted.toSeq)
       deduped.write.mode(SaveMode.Append).parquet(target)
+    })
+  }
+
+  /** Runs independent actions at the same time, one thread each, and
+    * returns their results in order once all have ended. The threads are
+    * started from the caller, so they inherit its Spark local properties
+    * and active session. The first failure in branch order is rethrown,
+    * with the other failures attached as suppressed. */
+  private def concurrently[T](branches: Seq[() => T]): Seq[T] = {
+    val results = new Array[Any](branches.size)
+    val failures = new Array[Throwable](branches.size)
+    val threads = branches.zipWithIndex.map { case (branch, i) =>
+      new Thread(() =>
+        try results(i) = branch()
+        catch { case t: Throwable => failures(i) = t },
+        s"EtlPipeline-action-$i")
+    }
+    try {
+      threads.foreach(_.start())
+      threads.foreach(_.join())
+    } finally {
+      // live threads here only if the caller was interrupted while
+      // waiting or a thread failed to start
+      val live = threads.filter(_.isAlive)
+      live.foreach(_.interrupt())
+      live.foreach(_.join())
+    }
+    failures.filter(_ != null) match {
+      case Array(first, rest @ _*) =>
+        rest.foreach(first.addSuppressed)
+        throw first
+      case _ => results.toSeq.map(_.asInstanceOf[T])
     }
   }
 
@@ -181,19 +242,19 @@ object EtlPipeline {
   /** EP1 with per-action telemetry — the Spark-native analog of the
     * reference's `decorator_logger` timing wrapper around every pipeline
     * stage (`utils/__init__.py:156-182`): returns the gold entities plus
-    * one (action, duration) record per executed job. */
+    * one (action, duration) record per executed query. */
   def runInstrumented(spark: SparkSession, sfDir: String, zones: Zones,
       targetDir: String, batchId: String,
       clock: java.time.Clock = java.time.Clock.systemUTC())
       : (Map[String, DataFrame], Seq[Telemetry.QueryRecord]) = {
+    // QueryExecutionListener callbacks ride the asynchronous listener bus:
+    // drain it before attaching (no earlier action's record) and after the
+    // run (every record of this one)
+    GraftListenerBus.drain(spark.sparkContext)
     val recorder = Telemetry.attach(spark)
     try {
       val gold = run(spark, sfDir, zones, targetDir, batchId, clock)
-      // QueryExecutionListener callbacks are delivered asynchronously on the
-      // shared listener bus; bounded poll until the first record lands
-      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-      while (recorder.records.isEmpty && System.nanoTime() < deadline)
-        Thread.sleep(50)
+      GraftListenerBus.drain(spark.sparkContext)
       (gold, recorder.records)
     } finally spark.listenerManager.unregister(recorder)
   }

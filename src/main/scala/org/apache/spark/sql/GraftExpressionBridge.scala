@@ -13,8 +13,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * (`classic.ExpressionUtils`), so this 4-line forwarder lives in the
   * `org.apache.spark.sql` package — the standard technique used by
   * open-source Spark extension libraries (frameless, sedona, delta) for
-  * exactly this need. Nothing else in the repo reaches into Spark
-  * internals; keep it that way.
+  * exactly this need. Apart from [[org.apache.spark.GraftListenerBus]],
+  * nothing else in the repo reaches into Spark internals; keep it that
+  * way.
   */
 object GraftExpressionBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

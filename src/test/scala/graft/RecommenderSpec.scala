@@ -2,6 +2,9 @@ package graft
 
 import graft.engine.{Drift, Glm, Recommender}
 import graft.llm.Retrieval
+import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
+import org.apache.spark.sql.catalyst.plans.LeftSemi
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
 import org.apache.spark.sql.functions._
 
 /** Hand-checkable pins for item-CF, PSI drift, IRLS logistic fit, and
@@ -32,6 +35,31 @@ class RecommenderSpec extends SparkSpec {
     val rows = r.collect()
     assert(rows.length === 2)
     assert(rows.forall(_.getAs[Double]("cos") === 1.0))
+  }
+
+  test("itemNeighbors: a power basket far above the cap is dropped before the collect") {
+    val small = Seq((1L, 10L), (1L, 20L), (2L, 10L), (2L, 20L), (3L, 10L),
+      (3L, 30L))
+    // one basket holding 5000 items, the small baskets' items among them
+    val power = (1L to 5000L).map(i => (99L, i))
+    val got = Recommender.itemNeighbors((small ++ power).toDF("b", "i"),
+      "b", "i", k = 3, maxBasket = 100)
+    val want = Recommender.itemNeighbors(small.toDF("b", "i"), "b", "i",
+      k = 3, maxBasket = 100)
+    assert(got.collect().toSet === want.collect().toSet)
+    // bounded state: the aggregation that collects the item arrays reads
+    // rows already filtered by the per-basket count (a left-semi join)
+    val collects = got.queryExecution.optimizedPlan.collect {
+      case a: Aggregate if a.aggregateExpressions
+        .exists(_.exists(_.isInstanceOf[CollectList])) => a
+    }
+    assert(collects.nonEmpty)
+    collects.foreach { a =>
+      assert(a.child.exists {
+        case j: Join => j.joinType == LeftSemi
+        case _ => false
+      }, a.treeString)
+    }
   }
 
   test("psiBins: identical populations give zero contributions") {

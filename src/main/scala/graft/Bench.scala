@@ -1,64 +1,34 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver benchmark: one JSON line of per-query wall-clock seconds.
   *
   * Env knobs: SPARK_GRAFT_SF_DIR (data dir), SPARK_GRAFT_CPUS (local
-  * threads = shuffle partitions), SPARK_GRAFT_ONLY (comma-separated query
-  * filter, dev profiling), SPARK_GRAFT_REPS (repetitions per query; the
-  * MINIMUM is reported — default 2, so the reported number is the
-  * steady-state time rather than whichever run ate a GC pause or cold
-  * code path; measured run-to-run drift on the full suite drops from
-  * ±8 s to well under 10% with the second rep).
+  * threads, read by [[Sessions.local]]), SPARK_GRAFT_ONLY
+  * (comma-separated query filter), SPARK_GRAFT_REPS (repetitions per
+  * query, default 2; the minimum is reported, so a GC pause or a cold
+  * code path in one rep does not set the figure), SPARK_GRAFT_BENCH_OUT
+  * (path of the full per-query line, default `bench_out.json`).
+  *
+  * Output contract: the LAST stdout line is a compact JSON summary (total
+  * plus the top-20 queries) that the caller parses; see the end of
+  * [[main]].
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE sort-merge→shuffled-hash conversion threshold. The default
-      // is Spark's stock 0 (never convert) because the choice is SCALE-
-      // DEPENDENT and was measured BOTH ways (round-9 isolated A/B,
-      // REPS=3, full 320-query registry, quiet machine —
-      // bench_r9_ab_shj64m.json vs bench_r9_ab_shj0.json): at sf0.1 the
-      // 64m threshold LOSES a net 21.5 s (250.1 vs 228.6 s; +31.8 s
-      // spread across ~90 mid-size-join queries whose builds convert and
-      // pay hash-build overhead SMJ's codegen path beats at this size,
-      // −10.3 s of wins) — it was the round-8 driver-bench regression.
-      // At sf1+ the picture inverts on the join-heavy tail (q_adamic_adar
-      // 64.5 s stock → 11.8 s at 64m: the wedge-stage degree joins skip
-      // their sorts; 512m → 115.9 s GC-thrash, so 64m is the scale
-      // sweet spot). SPARK_GRAFT_SHJ selects: unset/"0" = stock (the
-      // sf0.1 driver bench), "64m" for sf1+ scale sessions.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ", "0"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // driver-entry-point scope for the ObjectHashAggregate hash-mode
-    // capacity (see TopK.raiseSortFallbackThreshold's scaladoc)
-    graft.llm.TopK.raiseSortFallbackThreshold(spark)
+    val spark = Sessions.local()
     val selected = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    // One-shot JIT/codegen warmup on the smoke-scale data (not the bench
-    // inputs): exercises the parquet reader, join, aggregation and shuffle
-    // paths so the first measured query doesn't pay baseline JVM
-    // compilation. (A full per-query warmup does NOT pay off: AQE re-plans
-    // per data scale, so stage codegen doesn't transfer, and the extra 40
-    // runs just add metaspace/GC pressure — measured slower.)
+    // Warm-up tiers, on the smoke-scale data and outside every timer:
+    // each compiles a family of generated classes (relational scan/join/
+    // aggregate; the dedup shingle → minhash → CC chain; the remaining
+    // queries whose cold-vs-warm gap exceeds ~1 s) that the first timed
+    // query of that family would otherwise pay for. Warming every query
+    // measured slower: AQE re-plans per data scale, so the codegen does
+    // not transfer, and the extra runs add metaspace/GC pressure.
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    // Second warmup: the dedup kernel chain (shingles → minhash → CC),
-    // shared by the five heaviest queries, compiles a distinct set of
-    // generated classes the relational warmup never touches. Still on the
-    // smoke-scale data and outside every timer; measured -2.5s on the
-    // driver-config total. (Per-query warmup remains a non-starter — see
-    // the note above.)
     try {
       val docs = graft.engine.Tables
         .load(spark, "/root/testdata/sf0.001", "documents")
@@ -69,13 +39,6 @@ object Bench {
       spark.catalog.clearCache()
       System.gc()
     } catch { case _: Throwable => () }
-    // Third warmup tier: the remaining heavy-query code paths that the
-    // first two warmups never compile — star-contraction CC, the
-    // statistics window/aggregate chain, and the heap-aggregate cosine
-    // top-k. Same rules: smoke-scale inputs, outside every timer, cache
-    // hygiene after each. (Blanket all-query warmup measured SLOWER —
-    // metaspace/GC pressure; keep this list to the queries whose cold-vs-
-    // warm gap exceeds ~1s.)
     Seq("q_dup_clusters_star", "q_dpe_statistics", "q_cosine_topk",
       "q_corpus_clean", "q_repetition").foreach { n =>
       try {
@@ -98,13 +61,9 @@ object Bench {
             None
         }
       }
-      // Post-query hygiene, OUTSIDE the timer: drop cached/checkpointed
-      // blocks left by iterative operators (dupClusters' localCheckpoints,
-      // persisted shingle sets). Spark frees those via ContextCleaner weak
-      // references, i.e. only after a driver GC — across ~50 queries the
-      // blocks otherwise accumulate in the block manager and progressively
-      // starve later queries (measured: total 55s -> 151s run-to-run drift
-      // without this; stable with it).
+      // Outside the timer: drop the blocks that iterative operators cache
+      // or checkpoint. Spark frees them only after a driver GC, and left
+      // to pile up they slow every later query.
       spark.catalog.clearCache()
       System.gc()
       name -> (if (times.nonEmpty) times.min else -1.0)
@@ -117,22 +76,21 @@ object Bench {
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
     println(line)
-    // Self-persist the full line: the driver's stdout capture has
-    // truncated the per-query tail before (BENCH_r03.json carried ~68 of
-    // 253 timings), which hides per-query regressions from the
-    // round-over-round diff. The file is the complete record; stdout
-    // stays the driver contract. Env knob for an alternate path.
+    // The full line is also written to a file: a caller that keeps only
+    // the tail of stdout loses its head.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath),
       line + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
     }
-    // Compact summary LAST on stdout: the driver keeps only a ~1.5 KB
-    // tail of stdout, so the full ~9 KB line above loses its head and
-    // never parses ("parsed": null in BENCH_r04–r06). A final short line
-    // (total + top-20 queries by time) fits entirely inside the tail
-    // capture and parses; the full per-query map lives in the file above.
+    // The compact summary (total + top-20) is short enough to survive a
+    // ~1.5 KB stdout tail capture, and it must be the LAST stdout line,
+    // raw JSON with no logger prefix. Under `sbt runMain` sbt prints its
+    // own epilogue after the run, so a shutdown hook writes the line to
+    // the raw process stdout at exit; the print after `spark.stop()`
+    // covers a clean exit whatever order the JVM runs its hooks in (the
+    // duplicate is harmless: the last line wins).
     val topK = results.toSeq.sortBy(-_._2).take(20)
       .map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -141,23 +99,10 @@ object Bench {
         s""""queries":$topK,"sf":"$sfDir","n_queries":${results.size},""" +
         s""""note":"top-20 by time; full per-query map in $outPath"}"""
     println(compact)
-    // r07 post-mortem: the compact line DID land in the driver's stdout
-    // tail but still failed its structured parse — under `sbt runMain`
-    // every println rides the sbt logger ("[info] {...}") and sbt then
-    // appends its own "[success] Total time: ..." line, so the capture's
-    // LAST line is never raw JSON. A JVM shutdown hook writing straight
-    // to the process stdout fixes both: unforked (sbt's JVM) it fires
-    // AFTER sbt's [success] epilogue with no logger prefix; forked
-    // (tools/run_main.sh) it fires at process exit — last line either way.
     val rawOut = new java.io.PrintStream(
       new java.io.FileOutputStream(java.io.FileDescriptor.out), true)
     sys.addShutdownHook { rawOut.println(compact); rawOut.flush() }
     spark.stop()
-    // Normal-exit belt to the hook's suspenders: shutdown hooks run in
-    // unspecified order relative to other registered hooks, so a hook
-    // that writes stdout could land after ours. Printing once more after
-    // spark.stop() returns makes the clean-exit path hook-order-proof
-    // (the duplicate line is harmless — the driver takes the LAST line).
     rawOut.println(compact); rawOut.flush()
   }
 }

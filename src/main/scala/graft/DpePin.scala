@@ -61,17 +61,7 @@ object DpePin {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: graft.DpePin <fixtureDir> [more dirs...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // every query-running main raises the ObjectHashAggregate hash-mode
-    // capacity the same way (see TopK.raiseSortFallbackThreshold)
-    graft.llm.TopK.raiseSortFallbackThreshold(spark)
+    val spark = Sessions.local()
     args.foreach { dir =>
       println(s"// generated by graft.DpePin from $dir")
       println(pinBlock(spark, dir))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `explain("formatted")` for selected queries (all headline
   * queries by default) — used to audit pushdown/broadcast/codegen choices. */
 object Explain {
@@ -9,15 +7,9 @@ object Explain {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val names = if (args.length > 1) args(1).split(",").toSet
       else QueryRegistry.all.filter(_.headline).map(_.name).toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // match the query-running mains' aggregate config so the printed
-    // plans are the plans Bench/Verify actually execute
-    graft.llm.TopK.raiseSortFallbackThreshold(spark)
+    // the mains' own session, so the printed plans are the plans
+    // Bench/Verify execute
+    val spark = Sessions.local()
     QueryRegistry.all.filter(q => names.contains(q.name)).foreach { q =>
       println(s"\n=================== ${q.name} ===================")
       q.run(spark, sfDir).explain("formatted")

@@ -1,7 +1,7 @@
 package graft
 
+import org.apache.spark.GraftListenerBus
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -11,40 +11,32 @@ import scala.collection.mutable
   * first line of the stage's name/callsite — enough to attribute a
   * query's seconds to scans vs exchanges vs aggregates without the UI.
   *
-  * Env: PROFILE_QUERIES (comma list), PROFILE_DIR (data dir, default
-  * sf0.1), PROFILE_CPUS (default 32), PROFILE_REPS (default 2; stages of
-  * the LAST rep only are printed — warm numbers, like Bench's min).
+  * Env, as for [[Bench]]: SPARK_GRAFT_ONLY (comma list of queries,
+  * default q_calibration), SPARK_GRAFT_SF_DIR (data dir, default sf0.1),
+  * SPARK_GRAFT_CPUS (via [[Sessions.local]]), SPARK_GRAFT_REPS (default
+  * 2; stages of the LAST rep only are printed — warm numbers, like
+  * Bench's min).
   */
 object ProfileQ {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("PROFILE_CPUS", "32")
-    val names = sys.env.getOrElse("PROFILE_QUERIES", "q_calibration")
+    val names = sys.env.getOrElse("SPARK_GRAFT_ONLY", "q_calibration")
       .split(",").toSeq
-    val dir = sys.env.getOrElse("PROFILE_DIR", "/root/testdata/sf0.1")
-    val reps = sys.env.getOrElse("PROFILE_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.llm.TopK.raiseSortFallbackThreshold(spark)
+    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
+    val spark = Sessions.local()
 
     case class StageRow(id: Int, name: String, wallMs: Long,
       taskMs: Long, tasks: Int, inputMB: Double, shReadMB: Double,
       shWriteMB: Double, spillMB: Double)
     val rows = mutable.ArrayBuffer.empty[StageRow]
-    val submitted = mutable.Map.empty[Int, Long]
     var collecting = false
     val listener = new SparkListener {
-      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
-        submitted(s.stageInfo.stageId) = System.nanoTime()
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
         if (!collecting) return
         val si = s.stageInfo
-        val wall = submitted.get(si.stageId)
-          .map(t0 => (System.nanoTime() - t0) / 1000000L).getOrElse(-1L)
+        // the scheduler's own timestamps, not the (later) delivery time
+        val wall = (for (t1 <- si.completionTime; t0 <- si.submissionTime)
+          yield t1 - t0).getOrElse(-1L)
         val m = si.taskMetrics
         rows += StageRow(si.stageId, si.name.linesIterator.next(),
           wall, m.executorRunTime, si.numTasks,
@@ -60,6 +52,8 @@ object ProfileQ {
       val fn = SparkEntry.queries(n)
       var total = 0.0
       (1 to reps).foreach { r =>
+        // the previous rep's events land before the reset
+        GraftListenerBus.drain(spark.sparkContext)
         rows.clear()
         collecting = r == reps
         val t0 = System.nanoTime()
@@ -68,8 +62,7 @@ object ProfileQ {
         spark.catalog.clearCache()
         System.gc()
         if (r == reps) {
-          // listener bus is async; let the last events drain
-          Thread.sleep(300)
+          GraftListenerBus.drain(spark.sparkContext)
           println(f"%n===== $n rep=$r rows=$cnt total=$total%.3f s =====")
           println(f"${"stage"}%6s ${"wall_ms"}%8s ${"task_ms"}%8s " +
             f"${"tasks"}%5s ${"in_MB"}%8s ${"shR_MB"}%7s ${"shW_MB"}%7s " +

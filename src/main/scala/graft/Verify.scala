@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,21 +8,7 @@ object Verify {
     // optional trailing args: only dump these queries (dev iteration; the
     // driver always passes exactly two args → full dump)
     val only = if (args.length > 2) Some(args.drop(2).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // int64 micros (not INT96/nanos) so the driver's pandas/DuckDB
-      // compare sees identical timestamp units on both sides
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // driver-entry-point scope for the ObjectHashAggregate hash-mode
-    // capacity (see TopK.raiseSortFallbackThreshold's scaladoc)
-    graft.llm.TopK.raiseSortFallbackThreshold(spark)
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -1,11 +1,8 @@
 package graft.engine
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-
 /** Date tags used by the reference for zone file naming
-  * (`utils/fonctions.py:75-79`: `YYYY_MM_DD` of today/yesterday) — both as
-  * driver-side strings for file names and as Catalyst columns. */
+  * (`utils/fonctions.py:75-79`: `YYYY_MM_DD` of today/yesterday), as
+  * driver-side strings for file names. */
 object Dates {
   private val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy_MM_dd")
 
@@ -14,8 +11,6 @@ object Dates {
 
   def yesterdayTag(clock: java.time.Clock = java.time.Clock.systemUTC()): String =
     java.time.LocalDate.now(clock).minusDays(1).format(fmt)
-
-  def todayTagCol: Column = date_format(current_date(), "yyyy_MM_dd")
 
   /** Reference zone file naming: `{entity}_{date}_{batch_id}` (
     * `transform.py:308`). */

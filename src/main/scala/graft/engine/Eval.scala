@@ -127,8 +127,8 @@ object Eval {
     * level is a no-op and this equals the flat tier by construction
     * (EvalSpec gate). MEASURED CAVEAT: this variant's coarse level is
     * id-seeded (untrained) — on a drifted corpus it collapses assignment
-    * mass and ran 3.3× SLOWER than flat at sf100 (SCALING.md finding 3 /
-    * CellBalance); linear-candidate volume holds only when the coarse
+    * mass and ran 3.3× SLOWER than flat at sf100 (SCALING.md finding 3);
+    * linear-candidate volume holds only when the coarse
     * level spreads. Prefer [[knnClassifyIvfHierTrained]] at scale. */
   def knnClassifyIvfHier(emb: DataFrame, idCol: String, vecCol: String,
       labelCol: String, k: Int, targetCellSize: Int, nprobe: Int,

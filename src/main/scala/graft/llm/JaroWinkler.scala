@@ -88,10 +88,6 @@ object JaroWinkler {
     } else jaro
   }
 
-  /** Test/utility entry over raw byte arrays. */
-  private[llm] def jaroWinklerBytes(s: Array[Byte], t: Array[Byte]): Double =
-    similarity(UTF8String.fromBytes(s), UTF8String.fromBytes(t))
-
   /** `similarity(a, b) >= threshold` with a score cutoff: since the match
     * count m is at most min(|a|,|b|), `jaro <= (2 + min/max)/3`, and the
     * Winkler boost is bounded by `jw <= 0.4 + 0.6·jaro`, so

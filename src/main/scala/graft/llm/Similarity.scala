@@ -255,11 +255,8 @@ object Similarity {
   }
 
   // ---------------------------------------------------------------------
-  // Multi-probe IVF routing stages — shared by the flat tier, the
-  // two-level (hier) tiers, and the [[graft.CellBalance]] diagnostic,
-  // which must replay the PRODUCTION routing tree by construction (a
-  // copy would silently measure a different router the moment a seeding
-  // or tie-break rule changed here).
+  // Multi-probe IVF routing stages — shared by the flat tier and the
+  // two-level (hier) tiers.
   // ---------------------------------------------------------------------
 
   /** (id, v, n2) with zero-norm vectors excluded from corpus and queries
@@ -281,13 +278,13 @@ object Similarity {
       .toDF("cid", "cv", "cn2"))
 
   /** Id-seeded super-centroids (sid, sv, sn2): the `scells` lowest-id
-    * vectors. MEASURED CAVEAT (sf100, 2M vectors — SCALING.md finding 3 /
-    * CellBalance): id-seeding the COARSE level is only safe when the
+    * vectors. MEASURED CAVEAT (sf100, 2M vectors — SCALING.md finding 3):
+    * id-seeding the COARSE level is only safe when the
     * lowest-id vectors happen to spread the corpus; on a drifted fixture
     * the untrained super-centroids collapse assignment mass (maxAssign
     * 45,042 vs flat 3,242), inflate candidate pairs 4.2×, and the hier
     * tier runs 3.3× SLOWER than flat. Use [[trainedSuperCents]] at scale. */
-  private[graft] def idSeededSuperCents(withNorm: DataFrame,
+  private def idSeededSuperCents(withNorm: DataFrame,
       scells: Int): DataFrame =
     broadcast(withNorm.orderBy(col("id")).limit(scells)
       .toDF("sid", "sv", "sn2"))
@@ -550,7 +547,7 @@ object Similarity {
     *
     * Routing rows drop from n·cells to n·(√cells + sprobe·√cells) =
     * O(n·√cells·sprobe). MEASURED CAVEAT (sf100, 2M drifted vectors —
-    * SCALING.md finding 3 / CellBalance): the end-to-end volume is
+    * SCALING.md finding 3): the end-to-end volume is
     * candidates-dominated (linear) ONLY when the coarse level spreads
     * assignment mass. This variant's UNTRAINED id-seeded super-centroids
     * collapse on drifted corpora — maxAssign 45,042 vs flat 3,242,
@@ -599,7 +596,7 @@ object Similarity {
     *  - SUPER-centroids: [[trainedCentroids]] over those trained fine
     *    centroids, k = ⌊√cells⌋ — the coarse level must live in the
     *    CENTROID manifold it routes over (measured dead ends at sf100,
-    *    CellBalance: id-seeded coarse maxAssign 45,042; coarse trained
+    *    SCALING.md: id-seeded coarse maxAssign 45,042; coarse trained
     *    on the all-replica-0 id-seeded centroid table 25,273; coarse
     *    trained on a corpus sample OVER id-seeded fine centroids 48,331
     *    — spreading super-cells along an axis the fine centroids don't

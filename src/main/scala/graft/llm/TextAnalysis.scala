@@ -599,13 +599,6 @@ object TextAnalysis {
     transform(sequence(lit(1), greatest(length(padded) - 2, lit(1))),
       i => substr(padded, i, lit(3)))
 
-  /** Character trigrams of the lowercased text (word-boundary padded with
-    * spaces). Convenience composition — only safe on short strings; for a
-    * document scan, project [[paddedProfileText]] first and call
-    * [[slidingTrigrams]] on the resulting attribute. */
-  def charTrigrams(text: Column): Column =
-    slidingTrigrams(paddedProfileText(text))
-
   /** Per-language char-trigram profiles, derived deterministically from the
     * stopword lexicons (padded " word "): distinct (lang, trigram) pairs. */
   val TrigramProfiles: Seq[(String, String)] = Lexicon.flatMap {

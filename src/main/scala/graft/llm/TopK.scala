@@ -23,7 +23,7 @@ import org.apache.spark.sql.types._
   * before the exchange, so the shuffle carries |keys|×k rows instead of all
   * candidates, and nothing is globally sorted. That last clause is only
   * true in ObjectHashAggregate's HASH mode — see
-  * [[TopK.raiseSortFallbackThreshold]], which the driver entry points call
+  * [[TopK.raiseSortFallbackThreshold]], which [[graft.Sessions.local]] calls
   * to lift the 128-key sort-based fallback threshold that would otherwise
   * silently re-introduce a full-input sort on any large key domain.
   *
@@ -143,13 +143,14 @@ object TopK {
     * Spark conf, `spark.conf.getOption` returns the DEFAULT ("128") even
     * when nothing was ever set, so unset-vs-explicitly-128 is not
     * distinguishable through the public conf API (measured the hard way:
-    * an isEmpty guard here never fired and CellBalance re-ran the 2 TB
-    * sf100 sort-spill this raise exists to prevent). */
+    * an isEmpty guard here never fired and an sf100 run re-ran the 2 TB
+    * sort-spill this raise exists to prevent). */
   private val CapacityKey = "spark.graft.objectHashCapacity"
 
   /** Raise the sort-based fallback threshold for this session — called by
-    * the DRIVER ENTRY POINTS (Bench / Verify / CellBalance / Scratch),
-    * never as a side effect of registering a function: the threshold is
+    * [[graft.Sessions.local]], the factory of every graft entry point
+    * (Bench, Verify, DpePin, Explain, FixtureGen, ProfileQ, the test
+    * suites), never as a side effect of registering a function: the threshold is
     * session-wide and also governs Spark builtins with genuinely
     * unbounded per-key buffers (collect_list / collect_set / percentile),
     * where the sort fallback is an OOM safety valve. A raise hidden

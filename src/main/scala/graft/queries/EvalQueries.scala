@@ -153,7 +153,7 @@ object EvalQueries {
     // cuts routing to O(n·√cells) — the FAISS coarse-quantizer shape.
     // Same vote, same tie-breaks; the oracle replays the two-level
     // routing relationally (scent/cmap/sroute CTEs). MEASURED CAVEAT
-    // (SCALING.md sf100 finding 3 / CellBalance): this tier's coarse
+    // (SCALING.md sf100 finding 3): this tier's coarse
     // level is id-seeded (untrained) — on a drifted corpus it collapses
     // assignment mass and ran 3.3× SLOWER than flat at sf100; the
     // linear-candidate contract holds only when the coarse level
@@ -199,7 +199,7 @@ object EvalQueries {
     // Two-level multi-probe IVF 5-NN with a K-MEANS-TRAINED coarse
     // quantizer — the production form of q_knn_ann_hier. The id-seeded
     // coarse level measurably INVERTS at sf100 on a drifted corpus
-    // (hier 1873.9 s vs flat 574.1 s; CellBalance maxAssign 45,042 vs
+    // (hier 1873.9 s vs flat 574.1 s; maxAssign 45,042 vs
     // 3,242 — a quantizer is only as good as its training), so this tier
     // trains BOTH levels with deterministic fixed-point Lloyd rounds —
     // fine centroids on a md5-ordered corpus sample of 4·cells vectors

@@ -527,13 +527,7 @@ class EncodeProps extends Properties("engine.encode") {
   override def overrideParameters(p: org.scalacheck.Test.Parameters) =
     p.withMinSuccessfulTests(12)
 
-  private lazy val spark = org.apache.spark.sql.SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = Sessions.local(4)
 
   private val cats: Gen[List[Option[String]]] =
     Gen.listOf(Gen.frequency(

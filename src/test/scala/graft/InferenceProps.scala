@@ -18,13 +18,7 @@ class InferenceProps extends Properties("engine.inference") {
   override def overrideParameters(p: org.scalacheck.Test.Parameters) =
     p.withMinSuccessfulTests(10)
 
-  private lazy val spark = org.apache.spark.sql.SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = Sessions.local(4)
 
   private val smallP: Gen[List[Double]] =
     Gen.choose(2, 12).flatMap(m =>

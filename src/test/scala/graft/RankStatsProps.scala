@@ -22,13 +22,7 @@ class RankStatsProps extends Properties("engine.rankstats") {
   override def overrideParameters(p: org.scalacheck.Test.Parameters) =
     p.withMinSuccessfulTests(10)
 
-  private lazy val spark = org.apache.spark.sql.SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = Sessions.local(4)
 
   // grouped integer-valued samples: small k, deliberate tie pressure
   // (values from a narrow range) — the generators hit all-tied groups,

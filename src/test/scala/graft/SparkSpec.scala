@@ -3,20 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM-wide via getOrCreate). */
+/** Shared local session for all suites (one JVM-wide via getOrCreate),
+  * from the same factory as the mains. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // WARN like every main: the suite otherwise logs INFO for every one
-    // of its thousands of stages — measurable wall-clock and the reason
-    // the round-10 driver capture's test tail was all scheduler spam
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Sessions.local(4)
 }

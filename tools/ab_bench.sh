@@ -3,20 +3,10 @@
 # classes dir (so two compiled trees can alternate in one quiet session).
 # Usage: CLASSES_DIR=/tmp/classes_old tools/ab_bench.sh out.json q1,q2 [reps] [cpus]
 set -euo pipefail
-REPO="$(cd "$(dirname "$0")/.." && pwd)"
-CLASSES="${CLASSES_DIR:-$REPO/target/scala-2.13/classes}"
 OUT="${1:?out json path}"; ONLY="${2:?query list}"
 REPS="${3:-3}"; CPUS="${4:-32}"
-CP="$CLASSES:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
-OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
 SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" \
 SPARK_GRAFT_CPUS="$CPUS" SPARK_GRAFT_REPS="$REPS" \
 SPARK_GRAFT_ONLY="$ONLY" SPARK_GRAFT_BENCH_OUT="$OUT" \
-exec java $OPENS -Xmx"${GRAFT_MEM:-48g}" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$CP" graft.Bench
+GRAFT_MEM="${GRAFT_MEM:-48g}" \
+exec "$(dirname "$0")/run_main.sh" graft.Bench

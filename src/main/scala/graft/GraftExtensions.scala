@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, GraftExpressionBridge, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -15,11 +15,15 @@ import graft.llm.{CovSums, DotProductExpr, JaroWinklerExpr, MinHashSigsExpr, Sim
   *    cluster;
   *  - [[GraftFunctions.registerAll]] for an existing session.
   *
+  * DataFrame code needs neither: [[GraftFunctions.column]] binds a
+  * function's expression into a `Column` directly, leaving the session's
+  * function registry and optimizer untouched.
+  *
   * Surface: `simhash64(text)`, `dot_seq(arr, arr)`,
   * `topk_by_score(score, id, k)`, `word_shingles(text, n)` — all native
   * expressions/aggregates (no
   * UDF serialization, codegen-friendly). The builder lambdas here are the
-  * single source of truth; the per-object `register` helpers delegate.
+  * single source of truth; Column forms apply the same builders.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftFunctions._
@@ -115,15 +119,29 @@ object GraftFunctions {
         s"$fn: seed must be a string literal, got $other")
     }
 
-  /** Register one function by name on an existing session. */
-  def register(spark: SparkSession, name: String): Unit = {
-    val (_, _, builder) = all.find(_._1 == name)
-      .getOrElse(throw new IllegalArgumentException(s"unknown function $name"))
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
+  private lazy val builders: Map[String, Seq[Expression] => Expression] =
+    all.map { case (name, _, builder) => name -> builder }.toMap
+
+  /** Column form of one engine function: its builder applied to the
+    * argument expressions. Needs no registration and mutates no session. */
+  def column(name: String, args: Column*): Column = {
+    val builder = builders.getOrElse(name,
+      throw new IllegalArgumentException(s"unknown function $name"))
+    GraftExpressionBridge.column(builder(args.map(GraftExpressionBridge.expression)))
   }
 
-  /** Register every engine function on an existing session. */
-  def registerAll(spark: SparkSession): Unit =
-    all.foreach { case (name, _, _) => register(spark, name) }
+  /** The SQL opt-in for an existing session: registers every engine
+    * function by name (replacing any temporary function of the same name)
+    * and installs the `jaro_winkler(a, b) >= t` fusion rule, as
+    * [[GraftExtensions]] does config-side. */
+  def registerAll(spark: SparkSession): Unit = {
+    all.foreach { case (name, _, builder) =>
+      spark.sessionState.functionRegistry
+        .createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
+    // extraOptimizations is a plain Seq: guard against a double append
+    if (!spark.experimental.extraOptimizations.contains(graft.llm.FuseJaroThreshold))
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ graft.llm.FuseJaroThreshold
+  }
 }

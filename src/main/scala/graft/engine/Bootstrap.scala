@@ -60,7 +60,6 @@ object Bootstrap {
       keyCol: Column, b: Int = 50, lo: Double = 0.025,
       hi: Double = 0.975, seed: String = "boot"): DataFrame = {
     require(b >= 2 && lo < hi, s"b=$b lo=$lo hi=$hi")
-    graft.GraftFunctions.register(df.sparkSession, "poisson_boot_sums")
     val base = df.where(col(valueCol).isNotNull)
       .select(col(groupCol).as("g"),
         (col(valueCol).cast("decimal(18,2)") * 100).cast("long")
@@ -69,7 +68,7 @@ object Bootstrap {
     val agg = base.groupBy(col("g")).agg(
       count(lit(1)).as("n"),
       sum(col("cents")).as("sc"),
-      call_function("poisson_boot_sums", col("k"), col("cents"),
+      graft.GraftFunctions.column("poisson_boot_sums", col("k"), col("cents"),
         lit(b), lit(seed)).as("bs"))
     val mean = round((col("sc").cast("double") / lit(100.0)) /
       col("n").cast("double"), 8)

@@ -22,7 +22,12 @@ object Eval {
     * Classes are the union of both sides (a class never predicted still
     * reports recall; a hallucinated class reports precision 0). NULL
     * metric where the denominator is 0. Output: class, support, tp, fp,
-    * fn, precision, recall, f1 — ordered by class. */
+    * fn, precision, recall, f1 — ordered by class.
+    *
+    * NULL actual or predicted values form their own class (the NULL
+    * `cls` row, ordered first) with their real support and predicted
+    * counts; a NULL predicted for a NULL actual is not a true positive
+    * (SQL `=`), so that row's tp is 0. Filter NULLs first to drop them. */
   def confusionReport(preds: DataFrame, actualCol: String,
       predCol: String): DataFrame = {
     val base = preds.select(col(actualCol).cast("string").as("a"),

@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
   * and 300 jobs for a 100-float-column silver schema.
   *
   * Exact `percentile` is used for oracle/pandas parity (linear
-  * interpolation, matches `quantile_cont`); at extreme scale swap
-  * `percentile_approx(c, p, accuracy)` in via `approx = true` — same plan
-  * shape, bounded memory.
+  * interpolation, matches `quantile_cont`); at extreme scale the
+  * session flag `spark.graft.percentile.approx` ([[Percentiles]]) swaps
+  * `percentile_approx(c, p, accuracy)` in — same plan shape, bounded
+  * memory.
   */
 object Impute {
 
@@ -26,15 +27,13 @@ object Impute {
   private def dec(c: Column): Column = c.cast("decimal(18,2)")
 
   /** Compute per-column fill decisions (which strategy, which value).
-    * `approx = true` — or the session-wide
-    * `spark.graft.percentile.approx` flag ([[Percentiles]]) — swaps the
-    * exact quantiles for the bounded-memory GK sketch; plan shape is
-    * unchanged. */
-  def decisions(df: DataFrame, cols: Seq[String],
-      approx: Boolean = false): Seq[FillDecision] = {
+    * The session flag `spark.graft.percentile.approx` ([[Percentiles]])
+    * swaps the exact quantiles for the bounded-memory GK sketch; plan
+    * shape is unchanged. */
+  def decisions(df: DataFrame, cols: Seq[String]): Seq[FillDecision] = {
     require(cols.nonEmpty, "no columns to impute")
     def pct(c: String, p: Double): Column =
-      Percentiles.pct(df.sparkSession, col(c), lit(p), force = approx)
+      Percentiles.pct(df.sparkSession, col(c), lit(p))
 
     val qAggs = cols.flatMap { c => Seq(
       pct(c, 0.25).as(s"${c}__q1"),
@@ -69,9 +68,9 @@ object Impute {
 
   /** Apply the reference's fill rule; returns the filled frame plus the
     * `cols_filled`-style audit map (`transform.py:81,131-143`). */
-  def fillFloats(df: DataFrame, cols: Seq[String],
-      approx: Boolean = false): (DataFrame, Map[String, String]) = {
-    val ds = decisions(df, cols, approx)
+  def fillFloats(df: DataFrame, cols: Seq[String])
+      : (DataFrame, Map[String, String]) = {
+    val ds = decisions(df, cols)
     val filled = if (ds.isEmpty) df
       else df.na.fill(ds.map(d => d.column -> d.fillValue).toMap)
     (filled, ds.map(d => d.column -> d.strategy).toMap)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.llm.JaroWinkler.jaroWinkler
+import graft.llm.JaroWinkler.{jaroWinkler, jaroWinklerAtLeast}
 
 /** Fuzzy record linkage: the approximate tier of the reference's
   * exact-key address matching (`extract.py:529-535` joins Enedis rows to
@@ -52,10 +52,10 @@ object Linkage {
     // than they save on ~35-byte names (2.6 s -> 3.8 s at sf0.1). On long
     // fields (addresses, titles) re-introduce it ahead of the score.
     a.join(b, Seq("__blk"))
-      .filter(col("a_key") < col("b_key"))
-      .withColumn("sim", jaroWinkler(col("a_name"), col("b_name")))
-      .filter(col("sim") >= lit(minSim))
-      .select("a_key", "b_key", "sim")
+      .filter(col("a_key") < col("b_key") &&
+        jaroWinklerAtLeast(col("a_name"), col("b_name"), minSim))
+      .select(col("a_key"), col("b_key"),
+        jaroWinkler(col("a_name"), col("b_name")).as("sim"))
   }
 
   /** Sorted-neighborhood candidate pairs: rank records by

@@ -50,8 +50,7 @@ object Percentiles {
     }.getOrElse(10000)
 
   /** Session-flagged percentile: exact by default, GK sketch when
-    * `spark.graft.percentile.approx=true` (or `force = true` for callers
-    * with their own opt-in parameter). `p` may be a scalar fraction or
+    * `spark.graft.percentile.approx=true`. `p` may be a scalar fraction or
     * an array literal of fractions (both built-ins accept either).
     *
     * The approx input is cast to double FIRST: exact `percentile`
@@ -59,9 +58,8 @@ object Percentiles {
     * child column's type — without the cast, flipping the flag would
     * change the result type under every caller that reads doubles
     * (getAs[Double] on an int/decimal column ⇒ ClassCastException). */
-  def pct(spark: SparkSession, c: Column, p: Column,
-      force: Boolean = false): Column =
-    if (force || approxEnabled(spark))
+  def pct(spark: SparkSession, c: Column, p: Column): Column =
+    if (approxEnabled(spark))
       percentile_approx(c.cast("double"), p, lit(accuracy(spark)))
     else percentile(c, p)
 }

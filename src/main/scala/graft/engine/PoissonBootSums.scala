@@ -2,7 +2,6 @@ package graft.engine
 
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
-import java.security.MessageDigest
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -52,11 +51,6 @@ case class PoissonBootSums(
 
   override def createAggregationBuffer(): Array[Long] = new Array[Long](bufLen)
 
-  @transient private lazy val md = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest =
-      MessageDigest.getInstance("MD5")
-  }
-
   // Poisson(1) CDF thresholds as unsigned 32-bit values (the hex
   // constants in Bootstrap, parsed once)
   @transient private lazy val thresholds: Array[Long] =
@@ -74,10 +68,9 @@ case class PoissonBootSums(
     if (k != null && c != null) {
       val key = k.asInstanceOf[UTF8String].toString
       val cents = c.asInstanceOf[Long]
-      val digest = md.get()
+      val digest = graft.Md5.digest()
       var chunk = 0
       while (chunk < chunks) {
-        digest.reset()
         // UTF-8, not ASCII: Catalyst md5 and DuckDB hash UTF-8 bytes —
         // an ASCII encode would silently break draw parity on any
         // non-ASCII key
@@ -182,19 +175,13 @@ case class SignFlipSums(
 
   override def createAggregationBuffer(): Array[Long] = new Array[Long](b)
 
-  @transient private lazy val md = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest =
-      MessageDigest.getInstance("MD5")
-  }
-
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val k = keyExpr.eval(input)
     val c = centsExpr.eval(input)
     if (k != null && c != null) {
       val key = k.asInstanceOf[UTF8String].toString
       val cents = c.asInstanceOf[Long]
-      val digest = md.get()
-      digest.reset()
+      val digest = graft.Md5.digest()
       digest.update((seed + "|" + key).getBytes(UTF_8))
       val d = digest.digest()
       var r = 0

@@ -1382,7 +1382,6 @@ object Stats {
   def groupedSignFlip(diffs: DataFrame, groupCol: String, keyCol: String,
       dCol: String, b: Int, seed: String = "perm"): DataFrame = {
     require(b >= 1 && b <= 128, s"groupedSignFlip: b=$b")
-    graft.GraftFunctions.register(diffs.sparkSession, "sign_flip_sums")
     // Listwise-drop NULL keys too (the randomizedResponse convention):
     // SignFlipSums.update skips null keys from every replicate sum, so a
     // NULL-keyed row kept here would enter t_obs and n but none of the
@@ -1397,7 +1396,7 @@ object Stats {
       .withColumn("__cents", (col("__d") * 100).cast("long"))
     val agg = base.groupBy(col("__g")).agg(
       sum(col("__d")).as("__tobs"), count(lit(1)).as("n"),
-      call_function("sign_flip_sums", col("__k"), col("__cents"),
+      graft.GraftFunctions.column("sign_flip_sums", col("__k"), col("__cents"),
         lit(b), lit(seed)).as("__tb"))
     val tobsCents = (col("__tobs") * 100).cast("long")
     val ne = aggregate(col("__tb"), lit(0L),

@@ -45,7 +45,6 @@ object CorpusPipeline {
     // native one-pass tokenizer (word_shingles n=1 ≡ TextAnalysis.tokens;
     // equivalence covered in DedupSpec) — the token array is the widest
     // intermediate of the gate stage
-    Shingles.register(docs.sparkSession)
     val counted = docs
       .select(col(idCol), col(textCol),
         Shingles.wordShingles(col(textCol), 1).as("__toks"))

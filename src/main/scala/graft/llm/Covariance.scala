@@ -2,12 +2,11 @@ package graft.llm
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Gram-matrix / covariance sums as a native aggregate: one pass over the
@@ -120,12 +119,10 @@ case class CovSums(
 }
 
 object Covariance {
-  def register(spark: SparkSession): Unit =
-    graft.GraftFunctions.register(spark, "cov_sums")
-
-  /** Column form (vec must be array<double>); requires [[register]]. */
+  /** Column form of `cov_sums(vec, dim)` (vec must be array<double>). */
   def covSums(vec: Column, dim: Int): Column =
-    call_function("cov_sums", vec, org.apache.spark.sql.functions.lit(dim))
+    graft.GraftFunctions.column("cov_sums", vec,
+      org.apache.spark.sql.functions.lit(dim))
 
   /** Upper-triangle covariance cells (i, j, n, cov) from one [[CovSums]]
     * pass: cov = E[x_i x_j] − E[x_i]E[x_j] at 8dp, the exact expression
@@ -134,7 +131,6 @@ object Covariance {
   def covarianceCells(emb: org.apache.spark.sql.DataFrame, vecCol: String,
       dim: Int): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    register(emb.sparkSession)
     val cs = emb
       .select(transform(col(vecCol), x => x.cast("double")).as("v"))
       .agg(covSums(col("v"), dim).as("cs"))

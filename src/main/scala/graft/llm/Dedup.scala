@@ -52,7 +52,6 @@ object Dedup {
     * [[wordShingles]] spec). */
   def shingleSets(docs: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
-    Shingles.register(docs.sparkSession)
     docs.select(col(idCol),
         explode(Shingles.wordShingles(col(textCol), n)).as("shingle"))
       .distinct()
@@ -109,10 +108,10 @@ object Dedup {
     * the optimizer barrier that keeps it at exactly one evaluation. */
   private def minhashSignaturesWithSize(docs: DataFrame, idCol: String,
       textCol: String, n: Int, numPerms: Int): DataFrame = {
-    graft.GraftFunctions.register(docs.sparkSession, "minhash_sigs")
     docs.select(col(idCol),
         explode(array(
-          call_function("minhash_sigs", col(textCol), lit(n), lit(numPerms))))
+          graft.GraftFunctions.column("minhash_sigs", col(textCol), lit(n),
+            lit(numPerms))))
           .as("__m"))
       .where(col("__m").isNotNull)
       .select(col(idCol) +:
@@ -168,7 +167,6 @@ object Dedup {
     * `distinct` of [[shingleSets]] is unnecessary on the scale path. */
   def rawShingles(docs: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
-    Shingles.register(docs.sparkSession)
     docs.select(col(idCol),
       explode(Shingles.wordShingles(col(textCol), n)).as("shingle"))
   }
@@ -931,8 +929,7 @@ object Dedup {
     * int64 headaches. */
   def simhashFingerprints(docs: DataFrame, idCol: String,
       textCol: String): DataFrame = {
-    SimHash.register(docs.sparkSession)
-    val h = expr(s"simhash64(`$textCol`)")
+    val h = graft.GraftFunctions.column("simhash64", col(textCol))
     val words = (0 until 4).map(k =>
       shiftrightunsigned(col("h"), k * 16).bitwiseAND(lit(0xffffL)).as(s"w$k"))
     docs.select(col(idCol), h.as("h"))

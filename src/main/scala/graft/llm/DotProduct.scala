@@ -1,10 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Sequential dot product of two double arrays as a native expression.
@@ -50,9 +49,7 @@ object DotProduct {
     acc
   }
 
-  def register(spark: SparkSession): Unit =
-    graft.GraftFunctions.register(spark, "dot_seq")
-
-  /** Column form; requires [[register]] on the session first. */
-  def dotSeq(a: Column, b: Column): Column = call_function("dot_seq", a, b)
+  /** Column form of `dot_seq(a, b)`. */
+  def dotSeq(a: Column, b: Column): Column =
+    graft.GraftFunctions.column("dot_seq", a, b)
 }

@@ -1,9 +1,8 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftExpressionBridge}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, DoubleType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -47,10 +46,10 @@ case class JaroWinklerExpr(left: Expression, right: Expression)
 /** `jaro_winkler(a, b) >= threshold` fused into one kernel call with a
   * score cutoff (the rapidfuzz `score_cutoff` idea): an O(1) length-ratio
   * upper bound rejects most non-matching pairs before the O(|a|·|b|)
-  * matching loop ever runs. Produced by [[FuseJaroThreshold]]; not
-  * user-facing. Boolean-identical to the unfused comparison — the bound
-  * is conservative (1e-9 slack on the cutoff), so no pair that could
-  * reach the threshold is skipped. */
+  * matching loop ever runs. Built by [[JaroWinkler.jaroWinklerAtLeast]]
+  * and, in SQL, by [[FuseJaroThreshold]]. Boolean-identical to the
+  * unfused comparison — the bound is conservative (1e-9 slack on the
+  * cutoff), so no pair that could reach the threshold is skipped. */
 case class JaroWinklerGteExpr(left: Expression, right: Expression,
     threshold: Double) extends BinaryExpression {
   override def dataType: DataType =
@@ -189,27 +188,27 @@ object JaroWinkler {
     (md / l1 + md / l2 + (md - trans) / md) / 3.0
   }
 
-  def register(spark: SparkSession): Unit = {
-    graft.GraftFunctions.register(spark, "jaro_winkler")
-    // Threshold fusion for existing sessions (GraftExtensions injects the
-    // same rule config-side for cluster SQL). extraOptimizations is a
-    // plain Seq — guard against double-append on repeated register calls.
-    if (!spark.experimental.extraOptimizations.contains(FuseJaroThreshold))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ FuseJaroThreshold
-  }
-
-  /** Column form; requires [[register]] on the session first. */
+  /** Column form of `jaro_winkler(a, b)`. */
   def jaroWinkler(a: Column, b: Column): Column =
-    call_function("jaro_winkler", a, b)
+    graft.GraftFunctions.column("jaro_winkler", a, b)
+
+  /** Column form of `jaro_winkler(a, b) >= threshold`, already fused into
+    * the cutoff kernel [[JaroWinklerGteExpr]] (the plan
+    * [[FuseJaroThreshold]] makes of the unfused comparison in SQL). */
+  def jaroWinklerAtLeast(a: Column, b: Column, threshold: Double): Column =
+    GraftExpressionBridge.column(JaroWinklerGteExpr(
+      GraftExpressionBridge.expression(a), GraftExpressionBridge.expression(b),
+      threshold))
 }
 
 /** Optimizer rule: rewrite `jaro_winkler(a, b) >= lit` (either comparison
   * orientation) into the fused cutoff kernel [[JaroWinklerGteExpr]], so a
   * thresholded fuzzy join skips the quadratic matching loop on pairs the
   * O(1) length bound already rules out. Semantics-preserving (see
-  * [[JaroWinkler.atLeast]]); SQL users get it for free through
-  * `spark.sql.extensions=graft.GraftExtensions`.
+  * [[JaroWinkler.atLeast]]); SQL users get it through
+  * `spark.sql.extensions=graft.GraftExtensions` or
+  * [[graft.GraftFunctions.registerAll]]. DataFrame code builds the fused
+  * filter itself with [[JaroWinkler.jaroWinklerAtLeast]].
   *
   * Measured honestly: on the TPC-H part-name fixture the rewrite is
   * perf-NEUTRAL (5-rep steady state 2.12-2.23 s vs 2.03-2.17 s at sf0.1)

@@ -1,6 +1,5 @@
 package graft.llm
 
-import java.security.MessageDigest
 
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -58,13 +57,6 @@ case class MinHashSigsExpr(child: Expression, n: Int, numPerms: Int)
 
 object MinHashSigs {
 
-  private val md5Local = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
-  }
-
-  private val HexDigits =
-    "0123456789abcdef".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-
   // "s|" prefixes for the digest seeds, grown on demand (tiny)
   @volatile private var prefixes: Array[Array[Byte]] = Array.empty
   private def prefix(s: Int): Array[Byte] = {
@@ -98,7 +90,7 @@ object MinHashSigs {
     val nSeeds = (numPerms + 1) / 2
     val mins = new Array[Long](numPerms)
     java.util.Arrays.fill(mins, -1L) // unsigned max
-    val md = md5Local.get()
+    val md = graft.Md5.digest()
     var i = 0
     var distinct = 0L
     while (i < count) {
@@ -108,7 +100,6 @@ object MinHashSigs {
         val bytes = sh.getBytes
         var s = 0
         while (s < nSeeds) {
-          md.reset()
           md.update(prefix(s))
           md.update(bytes)
           val d = md.digest()
@@ -132,14 +123,7 @@ object MinHashSigs {
     val out = new Array[Any](numPerms)
     i = 0
     while (i < numPerms) {
-      val v = mins(i)
-      val hex = new Array[Byte](16)
-      var j = 0
-      while (j < 16) {
-        hex(j) = HexDigits(((v >>> ((15 - j) * 4)) & 0xf).toInt)
-        j += 1
-      }
-      out(i) = UTF8String.fromBytes(hex)
+      out(i) = graft.Md5.hex(mins(i), 16)
       i += 1
     }
     InternalRow(new GenericArrayData(out), distinct)

@@ -36,7 +36,12 @@ object NaiveBayes {
 
   /** Self-train on `labelCol` and score every document under the learned
     * model. Output: idCol, labelCol (actual), predicted,
-    * neg_logprob (total score magnitude, double, 8dp-grid-exact). */
+    * neg_logprob (total score magnitude, double, 8dp-grid-exact).
+    *
+    * Requires each id to carry exactly one label. Rows sharing an id are
+    * scored as ONE document over their pooled tokens and every one of
+    * them is returned with that single prediction, so an id with two
+    * labels can be right for at most one of them. */
   def trainScore(docs: DataFrame, idCol: String, textCol: String,
       labelCol: String): DataFrame = {
     val toks = docs.select(col(idCol), col(labelCol).as("__lbl"),

@@ -1,10 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -48,13 +47,10 @@ case class WordShinglesExpr(child: Expression, n: Int)
 
 object Shingles {
 
-  /** Register `word_shingles(text, n)` for SQL/expr use on this session. */
-  def register(spark: SparkSession): Unit =
-    graft.GraftFunctions.register(spark, "word_shingles")
-
-  /** Column form (function must be registered on the session). */
+  /** Column form of `word_shingles(text, n)`. */
   def wordShingles(text: Column, n: Int): Column =
-    call_function("word_shingles", text, org.apache.spark.sql.functions.lit(n))
+    graft.GraftFunctions.column("word_shingles", text,
+      org.apache.spark.sql.functions.lit(n))
 
   private val Empty = new GenericArrayData(Array.empty[Any])
 

@@ -1,9 +1,7 @@
 package graft.llm
 
 import java.nio.charset.StandardCharsets
-import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
@@ -47,18 +45,6 @@ case class SimHash64Expr(child: Expression)
 
 object SimHash {
 
-  /** Register `simhash64(text)` for SQL/expr use on this session
-    * (delegates to the single builder registry in [[graft.GraftFunctions]]). */
-  def register(spark: SparkSession): Unit =
-    graft.GraftFunctions.register(spark, "simhash64")
-
-  // MessageDigest.getInstance is a provider lookup + allocation — at one
-  // call per TOKEN it dominates the kernel. Executors call compute from
-  // many codegen'd task threads, hence thread-local reuse (reset() via
-  // digest() is implicit).
-  private val md5Local = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
-  }
   private val sepPattern = java.util.regex.Pattern.compile("[^a-z0-9]+")
 
   def compute(text: String): Long = {
@@ -71,7 +57,7 @@ object SimHash {
       i += 1
     }
     val acc = new Array[Long](64)
-    val md = md5Local.get()
+    val md = graft.Md5.digest()
     counts.forEach { (tok, cnt) =>
       val d = md.digest(tok.getBytes(StandardCharsets.UTF_8))
       // bit j is bit (j%4) of the j/4-th HEX DIGIT of the md5 hex string —

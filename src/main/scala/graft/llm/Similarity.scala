@@ -1,8 +1,5 @@
 package graft.llm
 
-import java.nio.charset.StandardCharsets
-import java.security.MessageDigest
-
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -33,8 +30,7 @@ object Similarity {
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
   /** Same fold as [[dotFold]], evaluated by the native [[DotProductExpr]]
-    * (register once per session; bit-identical results, ~10x faster on
-    * wide pair joins). */
+    * (bit-identical results, ~10x faster on wide pair joins). */
   def dot(a: Column, b: Column): Column = DotProduct.dotSeq(a, b)
 
   /** Cosine from a pair dot product and the precomputed squared norms,
@@ -50,7 +46,6 @@ object Similarity {
     * Output: id1, id2, cos. Quadratic — verification/baseline path. */
   def cosinePairs(emb: DataFrame, idCol: String, vecCol: String,
       minCos: Double): DataFrame = {
-    DotProduct.register(emb.sparkSession)
     val withNorm = emb.select(col(idCol).as("id"),
       vecDouble(col(vecCol)).as("v"))
       .withColumn("n2", dot(col("v"), col("v")))
@@ -73,8 +68,6 @@ object Similarity {
     * Output: id, neighbor_id, rank, cos. */
   def topKNeighbors(emb: DataFrame, idCol: String, vecCol: String,
       k: Int): DataFrame = {
-    DotProduct.register(emb.sparkSession)
-    TopK.register(emb.sparkSession)
     val withNorm = emb.select(col(idCol).as("id"),
       vecDouble(col(vecCol)).as("v"))
       .withColumn("n2", dot(col("v"), col("v")))
@@ -97,7 +90,7 @@ object Similarity {
   def hyperplanes(planes: Int, dim: Int): Seq[Array[Double]] =
     (0 until planes).map { p =>
       Array.tabulate(dim) { j =>
-        val hex = md5Hex(s"hp$p|$j")
+        val hex = graft.Md5.hex(s"hp$p|$j")
         if (Character.digit(hex.charAt(0), 16) % 2 == 0) 1.0 else -1.0
       }
     }
@@ -116,7 +109,6 @@ object Similarity {
     // all-pairs cross join this function exists to avoid) — fail loud,
     // the ivfProbeTopKNeighbors parameter-guard convention
     require(planes >= 1, s"annPairs: planes=$planes")
-    DotProduct.register(emb.sparkSession)
     val hp = hyperplanes(planes, dimOf(emb, vecCol))
     val withB = emb.select(col(idCol).as("id"), vecDouble(col(vecCol)).as("v"))
       .withColumn("n2", dot(col("v"), col("v")))
@@ -146,7 +138,6 @@ object Similarity {
   def crossContamination(left: DataFrame, right: DataFrame, idCol: String,
       vecCol: String, planes: Int, minCos: Double): DataFrame = {
     require(planes >= 1, s"crossContamination: planes=$planes")
-    DotProduct.register(left.sparkSession)
     // schema drift between the two corpora must surface, not truncate:
     // the native dot loops to min(len) — with mismatched dims the
     // buckets and cosines would be silently computed over the shared
@@ -201,7 +192,6 @@ object Similarity {
     * SAME cell count bit-for-bit. Output: id, v, n2, cell. */
   def ivfCells(emb: DataFrame, idCol: String, vecCol: String,
       numCells: Int): DataFrame = {
-    DotProduct.register(emb.sparkSession)
     val withNorm = emb.select(col(idCol).as("id"), vecDouble(col(vecCol)).as("v"))
       .withColumn("n2", dot(col("v"), col("v")))
     val cells =
@@ -236,8 +226,6 @@ object Similarity {
     * as an equivalence gate. Output: id, neighbor_id, rank, cos. */
   def ivfTopKNeighbors(emb: DataFrame, idCol: String, vecCol: String,
       k: Int, numCells: Int): DataFrame = {
-    DotProduct.register(emb.sparkSession)
-    TopK.register(emb.sparkSession)
     val cells = ivfCells(emb, idCol, vecCol, numCells)
     val a = cells.toDF("id", "v1", "n21", "cell")
     val b = cells.toDF("neighbor_id", "v2", "n22", "cell")
@@ -263,7 +251,6 @@ object Similarity {
     * alike (no cosine exists — the [[mrlOverlap]] convention). */
   private[graft] def ivfNorm(emb: DataFrame, idCol: String,
       vecCol: String): DataFrame = {
-    DotProduct.register(emb.sparkSession)
     emb.select(col(idCol).as("id"), vecDouble(col(vecCol)).as("v"))
       .withColumn("n2", dot(col("v"), col("v")))
       .where(col("n2") > 0.0)
@@ -400,7 +387,6 @@ object Similarity {
     * subtree. Returns (id, probes[nprobe], v, n2). */
   private[graft] def flatRoute(withNorm: DataFrame, centroids: DataFrame,
       nprobe: Int): DataFrame = {
-    TopK.register(withNorm.sparkSession)
     withNorm.crossJoin(centroids)
       .select(col("id"), col("v"), col("n2"),
         cosine(col("v"), col("n2"), col("cv"), col("cn2")).as("score"),
@@ -422,7 +408,6 @@ object Similarity {
     * construction). Same output contract as [[flatRoute]]. */
   private[graft] def hierRoute(withNorm: DataFrame, centroids: DataFrame,
       superCents: DataFrame, nprobe: Int, sprobe: Int): DataFrame = {
-    TopK.register(withNorm.sparkSession)
     val cmap = broadcast(centroids.crossJoin(superCents)
       .select(col("cid"), col("cv"), col("cn2"),
         cosine(col("cv"), col("cn2"), col("sv"), col("sn2")).as("score"),
@@ -649,8 +634,6 @@ object Similarity {
     * rank, cos. */
   def hardNegatives(emb: DataFrame, idCol: String, vecCol: String,
       labelCol: String, k: Int, numCells: Int): DataFrame = {
-    DotProduct.register(emb.sparkSession)
-    TopK.register(emb.sparkSession)
     val cells = ivfCells(emb, idCol, vecCol, numCells)
       .join(emb.select(col(idCol).as("id"), col(labelCol).as("lbl")), "id")
     val a = cells.toDF("id", "v1", "n21", "cell", "lbl1")
@@ -670,7 +653,6 @@ object Similarity {
 
   def ivfPairs(emb: DataFrame, idCol: String, vecCol: String,
       numCells: Int, minCos: Double): DataFrame = {
-    DotProduct.register(emb.sparkSession)
     val cells = ivfCells(emb, idCol, vecCol, numCells)
     val a = cells.toDF("id1", "v1", "n21", "cell")
     val b = cells.toDF("id2", "v2", "n22", "cell")
@@ -849,7 +831,6 @@ object Similarity {
     * same verification runs inside LSH/IVF candidate buckets. */
   def quantizedCosPairs(emb: DataFrame, idCol: String, vecCol: String,
       minCos: Double): DataFrame = {
-    DotProduct.register(emb.sparkSession)
     // codes and their products are small integers (|q| ≤ 127, dots ≤
     // 127²·dim ≪ 2^53): every intermediate is exactly representable in
     // double, so the native codegen'd dot expression over double-cast
@@ -974,7 +955,6 @@ object Similarity {
       m: Int, ksub: Int, queryIds: Seq[Long], k: Int,
       scaleBits: Int = 20): DataFrame = {
     require(k >= 1 && queryIds.nonEmpty, s"pqAdcTopK: k=$k queries=$queryIds")
-    TopK.register(emb.sparkSession)
     val vx = pqVx(emb, idCol, vecCol, m, scaleBits)
     val cb = broadcast(pqCodebook(emb, idCol, vx, ksub))
     val codes = pqAssign(vx, cb).select(col("id"), col("s"), col("code"))
@@ -1018,7 +998,6 @@ object Similarity {
       scaleBits: Int = 20): DataFrame = {
     require(k >= 1 && cand >= k && queryIds.nonEmpty,
       s"pqAdcRerank: k=$k cand=$cand queries=$queryIds")
-    TopK.register(emb.sparkSession)
     val vx = pqVx(emb, idCol, vecCol, m, scaleBits)
     val cb = broadcast(pqCodebook(emb, idCol, vx, ksub))
     val codes = pqAssign(vx, cb).select(col("id"), col("s"), col("code"))
@@ -1062,7 +1041,6 @@ object Similarity {
       numCells: Int, m: Int, ksub: Int, queryIds: Seq[Long], k: Int,
       scaleBits: Int = 20): DataFrame = {
     require(k >= 1 && queryIds.nonEmpty, s"pqIvfTopK: k=$k queries=$queryIds")
-    TopK.register(emb.sparkSession)
     val cells = ivfCells(emb, idCol, vecCol, numCells)
       .select(col("id"), col("cell"))
     val vx = pqVx(emb, idCol, vecCol, m, scaleBits)
@@ -1102,7 +1080,6 @@ object Similarity {
       cand: Int, scaleBits: Int = 20): DataFrame = {
     require(k >= 1 && cand >= k && queryIds.nonEmpty,
       s"pqIvfRerank: k=$k cand=$cand queries=$queryIds")
-    TopK.register(emb.sparkSession)
     val candidates = pqIvfTopK(emb, idCol, vecCol, numCells, m, ksub,
         queryIds, cand, scaleBits)
       .select(col("query_id").as("qid"), col("neighbor_id").as("id"))
@@ -1139,7 +1116,6 @@ object Similarity {
     * Output: idCol, cluster_id, kept (false = semantic duplicate). */
   def semanticDedup(emb: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int, minCos: Double): DataFrame = {
-    DotProduct.register(emb.sparkSession)
     val assign = kmeansAssign(emb, idCol, vecCol, k, iters)
     // withNorm feeds BOTH pair sides and the final kept-projection: the
     // Lloyd-assignment subtree is the operator's most expensive plan, so
@@ -1179,11 +1155,6 @@ object Similarity {
       .select(size(col(vecCol)).as("d"))
       .head(1).headOption.map(_.getInt(0)).getOrElse(emptyDim)
 
-  private def md5Hex(s: String): String = {
-    val d = MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(StandardCharsets.UTF_8))
-    d.map(b => f"$b%02x").mkString
-  }
   /** Matryoshka truncation fidelity (Kusupati et al. 2022): for each
     * query vector, the top-k cosine neighbor set under the FULL
     * embedding vs under its first `prefixDim` components — overlap@k
@@ -1199,8 +1170,6 @@ object Similarity {
       prefixDim: Int, k: Int, queryPred: Column): DataFrame = {
     require(prefixDim >= 1, s"mrlOverlap: prefixDim=$prefixDim")
     require(k >= 1, s"mrlOverlap: k=$k")
-    DotProduct.register(emb.sparkSession)
-    TopK.register(emb.sparkSession)
     val base = emb.select(col(idCol).as("id"),
         vecDouble(col(vecCol)).as("v"))
       .withColumn("p", slice(col("v"), 1, prefixDim))

@@ -280,15 +280,9 @@ object Sketches {
 
   val HllBuckets = 64
 
-  private def md5Hex(s: String): String = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    d.map(b => f"$b%02x").mkString
-  }
-
   /** Bucket of a value: first md5 byte of "hllb|v" mod 64. */
   def hllScalarBucket(v: String): Int =
-    Integer.parseInt(md5Hex("hllb|" + v).substring(0, 2), 16) % HllBuckets
+    Integer.parseInt(graft.Md5.hex("hllb|" + v).substring(0, 2), 16) % HllBuckets
 
   /** Scalar twin of [[cmsCounts]]' cell derivation (row r of the sketch):
     * first md5 byte of "cms<r>|<v>" mod w — kept bit-identical to the
@@ -296,12 +290,12 @@ object Sketches {
     * ([[graft.streaming.EventStreams.cmsWindows]]) equals the batch
     * sketch cell-for-cell on equal input. */
   def cmsScalarCell(r: Int, v: String, w: Int): Int =
-    Integer.parseInt(md5Hex("cms" + r + "|" + v).substring(0, 2), 16) % w
+    Integer.parseInt(graft.Md5.hex("cms" + r + "|" + v).substring(0, 2), 16) % w
 
   /** rho of a value: leading zero bits of the 64-bit "hllr|v" hash
     * prefix + 1, clamped to 48 (same clamp as the relational form). */
   def hllScalarRho(v: String): Int = {
-    val h16 = md5Hex("hllr|" + v).substring(0, 16)
+    val h16 = graft.Md5.hex("hllr|" + v).substring(0, 16)
     val stripped = h16.dropWhile(_ == '0')
     val rho =
       if (stripped.isEmpty) 65

@@ -42,7 +42,6 @@ object Spans {
     require(k >= 1, s"k=$k")
     require(minTokens >= k, s"minTokens=$minTokens must be >= k=$k")
     require(maxDf >= 2, s"maxDf=$maxDf (cross-doc spans need df >= 2)")
-    Shingles.register(docs.sparkSession)
     val postings = docs.select(col(idCol).as("id"),
       posexplode(Shingles.wordShingles(col(textCol), k)).as(Seq("pos", "gram")))
     // df ∈ [2, maxDf]: df=1 grams cannot seed a cross-doc match, df>maxDf

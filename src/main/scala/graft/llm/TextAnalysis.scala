@@ -507,9 +507,8 @@ object TextAnalysis {
   def winnow(df: DataFrame, idCol: String, textCol: String,
       k: Int = 8, w: Int = 4): DataFrame = {
     require(k >= 1 && w >= 1, s"k=$k w=$w")
-    graft.GraftFunctions.register(df.sparkSession, "winnow_fps")
     df.select(col(idCol),
-      explode(call_function("winnow_fps", col(textCol), lit(k), lit(w)))
+      explode(graft.GraftFunctions.column("winnow_fps", col(textCol), lit(k), lit(w)))
         .as("fingerprint"))
   }
 
@@ -819,7 +818,6 @@ object TextAnalysis {
   def dupNgramFraction(df: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
     require(n >= 1, s"dupNgramFraction: n=$n")
-    Shingles.register(df.sparkSession)
     df.select(col(idCol), explode(Shingles.wordShingles(col(textCol), n)).as("__g"))
       .groupBy(col(idCol), col("__g"))
       .agg(count(lit(1)).as("__c"))
@@ -936,7 +934,6 @@ object TextAnalysis {
     * Output: id1 < id2, cos (≥ minCos), 8dp. */
   def tfidfCosinePairs(docs: DataFrame, idCol: String, textCol: String,
       maxDf: Long, minCos: Double, n: Int = 1): DataFrame = {
-    Shingles.register(docs.sparkSession)
     val tf = docs
       .select(col(idCol).as("id"),
         explode(Shingles.wordShingles(col(textCol), n)).as("word"))

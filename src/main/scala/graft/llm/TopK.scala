@@ -9,7 +9,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Grouped top-k as a native aggregate: keep the k best (score, id) pairs
@@ -40,12 +39,12 @@ case class TopKByScore(
   extends TypedImperativeAggregate[mutable.PriorityQueue[(Double, Long)]] {
 
   // NOTE: inputs MUST be (double, long) — update() unboxes with
-  // asInstanceOf. The registered builder (GraftFunctions) wraps both
+  // asInstanceOf. The builder in GraftFunctions wraps both
   // arguments in Cast unconditionally (SimplifyCasts erases the no-ops),
   // so an int32 parquet id or a float score coerces instead of crashing
   // an executor with an opaque ClassCastException. Constructing the
   // aggregate directly bypasses that coercion — go through the builder
-  // (call_function / TopK.topKByScore).
+  // (TopK.topKByScore or SQL `topk_by_score`).
   override def children: Seq[Expression] = Seq(scoreExpr, idExpr)
   override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(StructType(Seq(
@@ -150,12 +149,12 @@ object TopK {
   /** Raise the sort-based fallback threshold for this session — called by
     * [[graft.Sessions.local]], the factory of every graft entry point
     * (Bench, Verify, DpePin, Explain, FixtureGen, ProfileQ, the test
-    * suites), never as a side effect of registering a function: the threshold is
+    * suites), never as a side effect of binding a function: the threshold is
     * session-wide and also governs Spark builtins with genuinely
     * unbounded per-key buffers (collect_list / collect_set / percentile),
     * where the sort fallback is an OOM safety valve. A raise hidden
-    * inside register() would silently disable that valve for everything
-    * in the session — including sessions graft does not own. The graft
+    * inside a function binding would silently disable that valve for
+    * everything in the session — including sessions graft does not own. The graft
     * mains own their sessions, so here the raise is unconditional (to
     * 2^20, or to [[CapacityKey]] when set — the explicit-user-choice
     * channel, since the underlying Spark conf cannot distinguish unset
@@ -164,10 +163,8 @@ object TopK {
     spark.conf.set(FallbackThresholdKey,
       spark.conf.getOption(CapacityKey).getOrElse((1 << 20).toString))
 
-  def register(spark: SparkSession): Unit =
-    graft.GraftFunctions.register(spark, "topk_by_score")
-
-  /** Column form; requires [[register]] on the session first. */
+  /** Column form of `topk_by_score(score, id, k)`; `k` must be a
+    * positive integer literal. */
   def topKByScore(score: Column, id: Column, k: Column): Column =
-    call_function("topk_by_score", score, id, k)
+    graft.GraftFunctions.column("topk_by_score", score, id, k)
 }

@@ -1,6 +1,5 @@
 package graft.llm
 
-import java.security.MessageDigest
 
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -48,13 +47,6 @@ object Winnow {
 
   private val Empty = new GenericArrayData(Array.empty[Any])
 
-  private val md5Local = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
-  }
-
-  private val HexDigits =
-    "0123456789abcdef".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-
   /** One-pass winnowing kernel. Called from generated code — keep the
     * signature (UTF8String, int, int) → ArrayData stable. */
   def compute(text: UTF8String, k: Int, w: Int): ArrayData = {
@@ -76,13 +68,12 @@ object Winnow {
     if (nChars < k) return Empty
     val nGrams = nChars - k + 1
     // unsigned first-4-digest-bytes per gram == its 8-hex-char prefix order
-    val md = md5Local.get()
+    val md = graft.Md5.digest()
     val hashes = new Array[Long](nGrams)
     var g = 0
     while (g < nGrams) {
       val from = starts(g)
       val until = if (g + k < nChars) starts(g + k) else len
-      md.reset()
       md.update(bytes, from, until - from)
       val d = md.digest()
       hashes(g) = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
@@ -110,14 +101,7 @@ object Winnow {
     val out = new Array[Any](outVals.size)
     i = 0
     while (i < outVals.size) {
-      val v = outVals.get(i)
-      val hex = new Array[Byte](8)
-      var j = 0
-      while (j < 8) {
-        hex(j) = HexDigits(((v >>> ((7 - j) * 4)) & 0xf).toInt)
-        j += 1
-      }
-      out(i) = UTF8String.fromBytes(hex)
+      out(i) = graft.Md5.hex(outVals.get(i), 8)
       i += 1
     }
     new GenericArrayData(out)

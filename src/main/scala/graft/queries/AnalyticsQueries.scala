@@ -627,7 +627,6 @@ object AnalyticsQueries {
     // rows per group BEFORE the exchange — the window formulation the
     // oracle uses would shuffle and sort every row.
     QuerySpec("q_topk_group", (s, dir) => {
-      graft.llm.TopK.register(s)
       t(s, dir, "orders")
         .groupBy(col("o_orderpriority"))
         .agg(graft.llm.TopK.topKByScore(

@@ -29,7 +29,6 @@ object LinkageQueries {
     // case (AQE skew split owns the big blocks); the score filter runs
     // inside whole-stage codegen.
     QuerySpec("q_jaro_linkage", (s, dir) => {
-      graft.llm.JaroWinkler.register(s)
       Linkage.blockedJaroPairs(part(s, dir), "p_partkey", "p_name",
           "p_brand", minSim = 0.94)
         .orderBy("a_key", "b_key")
@@ -49,7 +48,6 @@ object LinkageQueries {
     // scale). q_jaro_linkage remains the labeled low-cardinality skew
     // drill; this is the key a production pass would register.
     QuerySpec("q_jaro_linkage_composite", (s, dir) => {
-      graft.llm.JaroWinkler.register(s)
       val blocked = part(s, dir).withColumn("__cb",
         concat_ws("|", col("p_brand"), split_part(col("p_name"), lit(" "), lit(1))))
       Linkage.blockedJaroPairs(blocked, "p_partkey", "p_name",
@@ -96,7 +94,6 @@ object LinkageQueries {
     // batch anti-joined on exact name (the reference's J3 shape), then
     // blocked Jaro-Winkler >= 0.95 recovers the match the exact join lost.
     QuerySpec("q_linkage_residue", (s, dir) => {
-      graft.llm.JaroWinkler.register(s)
       val p = part(s, dir)
       val batch = p.filter(col("p_partkey") % 10 === 0)
         .select(col("p_partkey"),
@@ -109,10 +106,10 @@ object LinkageQueries {
           col("p_name").as("__bn"), col("p_brand"))
         .join(existing.select(col("p_partkey").as("match_key"),
           col("p_name").as("__en"), col("p_brand")), Seq("p_brand"))
-        .withColumn("sim",
-          graft.llm.JaroWinkler.jaroWinkler(col("__bn"), col("__en")))
-        .filter(col("sim") >= 0.95)
-        .select("batch_key", "match_key", "sim")
+        .filter(graft.llm.JaroWinkler.jaroWinklerAtLeast(
+          col("__bn"), col("__en"), 0.95))
+        .select(col("batch_key"), col("match_key"),
+          graft.llm.JaroWinkler.jaroWinkler(col("__bn"), col("__en")).as("sim"))
         .orderBy("batch_key", "match_key")
     }, Some(
       """WITH batch AS (

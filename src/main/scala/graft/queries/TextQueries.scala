@@ -163,7 +163,6 @@ object TextQueries {
     QuerySpec("q_tfidf", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val d = docs(s, dir)
-      graft.llm.Shingles.register(s)
       val tok = d.select(col("doc_id"),
         explode(graft.llm.Shingles.wordShingles(col("text"), 1)).as("word"))
       val tf = tok.groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))

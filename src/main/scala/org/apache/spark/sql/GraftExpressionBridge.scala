@@ -1,16 +1,19 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
 
-/** Column ↔ Expression bridge for graft's native expressions that carry
-  * RUNTIME state (e.g. [[graft.engine.BloomMightContain]]'s broadcast
-  * filter handle) and therefore cannot go through the literal-only
-  * function-registry path the other graft expressions use
-  * (`GraftFunctions` / `expr("simhash64(...)")`).
+/** Column ↔ Expression bridge through which every graft native
+  * expression reaches the DataFrame API: the Column forms of the engine
+  * functions ([[graft.GraftFunctions.column]], which applies their
+  * builders to the argument expressions), the fused Jaro-Winkler cutoff,
+  * and expressions that carry runtime state
+  * ([[graft.engine.BloomMightContain]]'s broadcast filter handle). None
+  * of them goes through a session's function registry.
   *
   * Spark 4 gates these conversions behind `private[sql]`
-  * (`classic.ExpressionUtils`), so this 4-line forwarder lives in the
+  * (`classic.ExpressionUtils`, `classic.ColumnNodeToExpressionConverter`),
+  * so this forwarder lives in the
   * `org.apache.spark.sql` package — the standard technique used by
   * open-source Spark extension libraries (frameless, sedona, delta) for
   * exactly this need. Apart from [[org.apache.spark.GraftListenerBus]],
@@ -19,5 +22,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
   */
 object GraftExpressionBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
-  def expression(c: Column): Expression = ExpressionUtils.expression(c)
+  /** Converted now, not at analysis: the builders read their literal
+    * arguments (`k`, seeds) when they build the expression. */
+  def expression(c: Column): Expression = ColumnNodeToExpressionConverter(c.node)
 }

@@ -193,8 +193,11 @@ class ImputeSpec extends SparkSpec {
     val clean = Seq[Option[Double]](Some(1), Some(2), Some(3), Some(4), None)
     val outly = Seq[Option[Double]](Some(1), Some(2), Some(3), Some(1000), None)
     val df = clean.zip(outly).toDF("clean", "outly")
-    val (_, strategies) = Impute.fillFloats(df, Seq("clean", "outly"), approx = true)
-    assert(strategies === Map("clean" -> "mean", "outly" -> "median"))
+    spark.conf.set(Percentiles.ApproxConf, "true")
+    try {
+      val (_, strategies) = Impute.fillFloats(df, Seq("clean", "outly"))
+      assert(strategies === Map("clean" -> "mean", "outly" -> "median"))
+    } finally spark.conf.unset(Percentiles.ApproxConf)
   }
 
   test("all-null columns stay null (pandas: fillna(NaN) is a no-op)") {

@@ -33,6 +33,26 @@ class EvalSpec extends SparkSpec {
     assert(g.isNullAt(g.fieldIndex("recall")))
   }
 
+  test("confusionReport: NULL actual/predicted values form their own class") {
+    val preds = Seq[(Option[String], Option[String])](
+      (Some("a"), Some("a")), (None, Some("a")), (Some("a"), None),
+      (None, None)).toDF("actual", "pred")
+    val r = Eval.confusionReport(preds, "actual", "pred").collect()
+    // NULL sorts first; a NULL actual predicted NULL is not a true
+    // positive (SQL `=`), so the NULL class has tp 0
+    assert(r.map(x => Option(x.getAs[String]("cls"))).toSeq ===
+      Seq(None, Some("a")))
+    val n = r(0)
+    assert((n.getAs[Long]("support"), n.getAs[Long]("tp"), n.getAs[Long]("fp"),
+      n.getAs[Long]("fn")) === ((2L, 0L, 2L, 2L)))
+    assert(n.getAs[Double]("precision") === 0.0)
+    assert(n.getAs[Double]("recall") === 0.0)
+    assert(n.isNullAt(n.fieldIndex("f1")))
+    val a = r(1)
+    assert((a.getAs[Long]("support"), a.getAs[Long]("tp"), a.getAs[Long]("fp"),
+      a.getAs[Long]("fn")) === ((2L, 1L, 1L, 1L)))
+  }
+
   test("knnClassify: separable clusters classify perfectly") {
     // two tight clusters in 2D, labels 0/1
     val emb = Seq(
@@ -358,15 +378,13 @@ class EvalSpec extends SparkSpec {
   // not at sf100.
   test("sf1 recall gate: trained two-level IVF recall@5 and vote " +
       "agreement vs exact, at real cell counts") {
-    import graft.llm.{DotProduct, Similarity, TopK}
+    import graft.llm.{Similarity, TopK}
     // sf0.1 is part of the driver's fixture contract (TESTDATA.md) and
     // the only scale with enough vectors for real cell counts; cancel
     // loudly (not fail) on a partial checkout that generated only the
     // smaller fixtures
     assume(new java.io.File("/root/testdata/sf0.1/embeddings.parquet")
       .exists(), "sf0.1 fixture missing — the recall gate needs it")
-    DotProduct.register(spark)
-    TopK.register(spark)
     val emb = sf1EmbFixture()
     // production-parameter ANN over the full corpus, sampled queries out
     val ann = Similarity.ivfHierProbeTopKNeighborsTrained(emb, "vec_id",
@@ -439,11 +457,9 @@ class EvalSpec extends SparkSpec {
   // tier fails the suite at sf1 cost.
   test("sf1 recall gate, remaining ANN tiers: flat auto-cell IVF, " +
       "multi-probe, id-seeded hier vs exact cosine; PQ-ADC vs exact L2") {
-    import graft.llm.{DotProduct, Similarity, TopK}
+    import graft.llm.{Similarity, TopK}
     assume(new java.io.File("/root/testdata/sf0.1/embeddings.parquet")
       .exists(), "sf0.1 fixture missing — the recall gate needs it")
-    DotProduct.register(spark)
-    TopK.register(spark)
     val emb = sf1EmbFixture()
     val withNorm = emb.select(col("vec_id").as("id"),
         Similarity.vecDouble(col("embedding")).as("v"))

@@ -51,7 +51,7 @@ class LinkageSpec extends SparkSpec {
   }
 
   test("jaro_winkler SQL function evaluates through codegen") {
-    JaroWinkler.register(spark)
+    GraftFunctions.registerAll(spark)
     val out = Seq(("martha", "marhta"), ("DIXON", "DICKSONX"))
       .toDF("a", "b")
       .selectExpr("jaro_winkler(a, b) AS s")
@@ -80,7 +80,6 @@ class LinkageSpec extends SparkSpec {
 
   test("FuseJaroThreshold rewrites the thresholded predicate to the " +
       "cutoff kernel; results unchanged") {
-    JaroWinkler.register(spark)
     val df = graft.engine.Linkage.blockedJaroPairs(
       Seq((1L, "jonathan smith", "b"), (2L, "jonathon smith", "b"),
         (3L, "zz", "b")).toDF("id", "name", "blk"),
@@ -96,7 +95,6 @@ class LinkageSpec extends SparkSpec {
   }
 
   test("blockedJaroPairs pairs within blocks only, each pair once") {
-    JaroWinkler.register(spark)
     val df = Seq(
       (1L, "jonathan smith", "b1"),
       (2L, "jonathon smith", "b1"),

@@ -473,7 +473,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("native word_shingles matches the declarative spec (incl. unicode/edge cases)") {
-    Shingles.register(spark)
     val texts = Seq(
       "the quick brown fox jumps over the lazy dog",
       "  Leading   spaces, UPPER case, punct!!! and--dashes  ",
@@ -1476,6 +1475,21 @@ class TextAnalysisSpec extends SparkSpec {
       .collect().head
     assert(flat.getAs[Long]("n_ranks") === 1L)
     assert(flat.isNullAt(flat.fieldIndex("zipf_slope")))
+  }
+
+  test("NaiveBayes.trainScore: an id with two labels is one document with one prediction") {
+    val docs = Seq(
+      (1L, "buy spam buy offer", "s"),
+      (2L, "meeting agenda notes", "h"),
+      (3L, "notes meeting review", "h"),
+      (3L, "spam offer now buy", "s")).toDF("doc_id", "text", "source")
+    val got = graft.llm.NaiveBayes
+      .trainScore(docs, "doc_id", "text", "source")
+      .where(col("doc_id") === 3L).collect()
+    // both input rows come back, scored once over their pooled tokens,
+    // so at most one of the two labels can be predicted correctly
+    assert(got.map(_.getString(1)).sorted.toSeq === Seq("h", "s"))
+    assert(got.map(r => (r.getString(2), r.getDouble(3))).distinct.length === 1)
   }
 
   test("NaiveBayes.trainScore recovers separable labels; ties break to smallest label") {

@@ -54,9 +54,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("native expressions run inside whole-stage codegen") {
-    graft.llm.SimHash.register(spark)
     val df = Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), expr("simhash64(text)").as("h"))
+      .select(col("doc_id"), graft.GraftFunctions.column("simhash64", col("text")).as("h"))
     val exec = df.queryExecution.executedPlan
     val unwrapped = exec match {
       case a: AdaptiveSparkPlanExec => a.initialPlan
@@ -253,7 +252,6 @@ class PlanSpec extends SparkSpec {
   }
 
   test("cov_sums aggregates with a map-side partial (one buffer per task)") {
-    graft.llm.Covariance.register(spark)
     val df = Tables.load(spark, dir, "embeddings")
       .select(transform(col("embedding"), x => x.cast("double")).as("v"))
       .agg(graft.llm.Covariance.covSums(col("v"), 64).as("cs"))
@@ -380,7 +378,6 @@ class PlanSpec extends SparkSpec {
 
   test("blocked jaro linkage: hash join on the block key, no nested loop; " +
       "the kernel stays inside whole-stage codegen") {
-    graft.llm.JaroWinkler.register(spark)
     val df = QueryRegistry.byName("q_jaro_linkage").run(spark, dir)
     val plan = planString(df)
     // candidates come from an equi-join on __blk — never a cross product
@@ -401,7 +398,6 @@ class PlanSpec extends SparkSpec {
 
   test("composite-block jaro linkage: equi-join on the high-cardinality " +
       "composite key, no nested loop, kernel in codegen") {
-    graft.llm.JaroWinkler.register(spark)
     val df = QueryRegistry.byName("q_jaro_linkage_composite").run(spark, dir)
     val plan = planString(df)
     // pairs form ONLY via the __cb equi-join (brand|first-token) — the

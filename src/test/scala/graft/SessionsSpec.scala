@@ -27,7 +27,6 @@ class SessionsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("topk_by_score: the sort fallback at 128 keys and the raised " +
     "threshold's hash mode give the same result") {
-    TopK.register(spark)
     // 500 distinct keys in ONE input partition: past 128 keys the partial
     // aggregate falls back to sort-based aggregation
     def run(): (Seq[Row], Long) = {

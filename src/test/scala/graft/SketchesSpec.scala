@@ -136,7 +136,6 @@ class SketchesSpec extends SparkSpec {
       Tuple1((0 until dim).map(c => ((r * 31 + c * 7) % 13 - 6) / 3.0).toArray)
     }
     val df = vecs.toDF("v")
-    Covariance.register(spark)
     def run(d: org.apache.spark.sql.DataFrame): Row =
       d.agg(Covariance.covSums(col("v"), dim).as("cs")).select("cs.*").head()
     val r = run(df)
@@ -152,7 +151,6 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("cov_sums rejects wrong-dimension vectors") {
-    Covariance.register(spark)
     val bad = Seq(Tuple1(Array(1.0, 2.0))).toDF("v")
     val e = intercept[Exception] {
       bad.agg(Covariance.covSums(col("v"), 3)).head()

@@ -62,47 +62,4 @@ object Drift {
         round(p, 8).as("p"), round(q, 8).as("q"),
         round((p - q) * round(log(p / q), 8), 8).as("contrib"))
   }
-
-  /** PSI of a batch against FIXED reference bins — the streaming form:
-    * `edges` (ascending cuts) and `refProps` (per-bin reference
-    * proportions, edges.length + 1 of them) are computed ONCE from the
-    * reference population and reused per batch, so each micro-batch
-    * costs one aggregation over its own rows. Same eps-clip and
-    * 8dp-ln-grid contributions as [[psiBins]]. An EMPTY batch returns
-    * zero rows (nothing to monitor — the caller's alert logic decides).
-    * Output: bin, n_cur, p, q, contrib. */
-  def psiAgainstReference(batch: DataFrame, valueCol: String,
-      edges: Seq[Double], refProps: Seq[Double],
-      eps: Double = 1e-4): DataFrame = {
-    require(refProps.length == edges.length + 1,
-      s"need ${edges.length + 1} reference proportions")
-    val x = col(valueCol).cast("double")
-    val binExpr = edges.zipWithIndex
-      .map { case (e, _) => when(x > e, 1L).otherwise(0L) }
-      .reduce(_ + _)
-    val observed = batch.where(col(valueCol).isNotNull)
-      .select(binExpr.as("bin"))
-      .groupBy(col("bin")).agg(count(lit(1)).as("n_obs"))
-    // EVERY reference bin reports — a bin the batch never hits carries
-    // the LARGEST drift penalty ((p−eps)·ln(p/eps)); emitting only
-    // observed bins would under-report exactly the severe shifts
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val allBins = refProps.zipWithIndex
-      .map { case (pr, i) => (i.toLong, pr) }.toDF("bin", "p_ref")
-    val counts = allBins.join(observed, Seq("bin"), "left")
-      .select(col("bin"), col("p_ref"),
-        coalesce(col("n_obs"), lit(0L)).as("n_cur"))
-    val tot = counts.agg(sum(col("n_cur")).as("tc"))
-    val p = greatest(col("p_ref"), lit(eps))
-    val q = greatest(
-      when(col("tc") > 0,
-        col("n_cur").cast("double") / col("tc").cast("double"))
-        .otherwise(lit(0.0)), lit(eps))
-    counts.crossJoin(broadcast(tot))
-      .where(col("tc") > 0) // empty batch → zero rows, not eps noise
-      .select(col("bin"), col("n_cur"),
-        round(p, 8).as("p"), round(q, 8).as("q"),
-        round((p - q) * round(log(p / q), 8), 8).as("contrib"))
-  }
 }

@@ -561,52 +561,6 @@ object Eval {
             col("n_matched").cast("double"), 8)).as("att"))
   }
 
-  /** Empirical conformal coverage of a batch against FIXED per-group
-    * intervals (group, pred, qhat) — the monitoring half of
-    * [[conformalIntervals]]: a calibrated model's marginal coverage is
-    * ≥ 1−α by construction, so a batch whose observed rate falls below
-    * `minCoverage` signals drift between the calibration distribution
-    * and live data (the coverage analogue of the PSI monitor). Groups
-    * in the batch WITHOUT an interval alarm too (no model can certify
-    * them — fail loud, the absent-bin PSI lesson). One aggregation over
-    * the batch's own rows; the interval table is a driver-side literal
-    * broadcast (like the PSI reference bins). Output: groupCol, n,
-    * n_covered, coverage (8dp, NULL when no interval), alarm. */
-  def coverageAgainstIntervals(df: DataFrame, groupCol: String,
-      yCol: String, intervals: Seq[(String, Double, Double)],
-      minCoverage: Double): DataFrame = {
-    require(intervals.nonEmpty, "coverageAgainstIntervals: no intervals")
-    require(intervals.map(_._1).distinct.size == intervals.size,
-      "coverageAgainstIntervals: duplicate interval group keys — a " +
-        "group joined twice would double-count its rows")
-    require(minCoverage > 0.0 && minCoverage < 1.0,
-      s"minCoverage=$minCoverage")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val iv = broadcast(intervals.toDF(groupCol, "__pred", "__qhat"))
-    val y = col(yCol).cast("double")
-    // NULL outcomes count as UNCOVERED, not dropped: a group whose rows
-    // all turn unscoreable must depress coverage and alarm, not vanish
-    // from the monitor (the fail-loud stance of the unmodelled-group
-    // branch)
-    df
-      .join(iv, Seq(groupCol), "left")
-      .groupBy(col(groupCol))
-      .agg(count(lit(1)).as("n"),
-        sum(when(y.isNotNull &&
-          y >= col("__pred") - col("__qhat") &&
-          y <= col("__pred") + col("__qhat"), 1L).otherwise(0L))
-          .as("n_covered"),
-        max(col("__pred").isNotNull).as("__has"))
-      .select(col(groupCol), col("n"), col("n_covered"),
-        when(col("__has"),
-          round(col("n_covered").cast("double") / col("n").cast("double"),
-            8)).as("coverage"),
-        (!col("__has") ||
-          col("n_covered").cast("double") / col("n").cast("double") <
-            lit(minCoverage)).as("alarm"))
-  }
-
   /** Average precision / PR-AUC (the step-wise AP of the TREC eval
     * tradition) over a scored binary-label set — the precision-recall
     * companion of [[aucRank]] for class-imbalanced retrieval: AP =

@@ -96,4 +96,16 @@ object Scd {
 
     history.unionByName(keptOrClosed).unionByName(opened)
   }
+
+  /** Deterministic last-change-wins compaction of a CDC batch, the
+    * one-row-per-key input [[scd2Apply]] requires: one surviving row per
+    * key — the one with the greatest `orderCol`, ties broken by the
+    * attribute tuple (a struct-max aggregate, so the choice is identical
+    * under any partitioning, unlike `dropDuplicates`). */
+  def lastWinsByKey(batch: DataFrame, keyCols: Seq[String],
+      orderCol: String, attrCols: Seq[String]): DataFrame =
+    batch.groupBy(keyCols.map(col): _*)
+      .agg(max(struct(col(orderCol) +: attrCols.map(col): _*)).as("__b"))
+      .select(keyCols.map(col) ++
+        attrCols.map(c => col(s"__b.$c").as(c)): _*)
 }

@@ -19,8 +19,8 @@ object Skew {
 
   /** Two-phase aggregation: `aggs` are applied per (keys, salt), then the
     * provided `merge` expressions combine the salt buckets. For purely
-    * algebraic aggregates the same function works for both phases —
-    * `twoPhaseAlgebraic` covers that common case. */
+    * algebraic aggregates the merge re-applies the same function to the
+    * partial column (as [[saltedDecimalSum]] does for sums). */
   def twoPhaseAgg(df: DataFrame, keys: Seq[String], saltCol: Column,
       buckets: Int, aggs: Seq[Column], merge: Seq[Column]): DataFrame = {
     val salted = df.withColumn("__salt", pmod(hash(saltCol), lit(buckets)))
@@ -28,19 +28,6 @@ object Skew {
       .groupBy((keys.map(col) :+ col("__salt")): _*)
       .agg(aggs.head, aggs.tail: _*)
     phase1.groupBy(keys.map(col): _*).agg(merge.head, merge.tail: _*)
-  }
-
-  /** Algebraic sum/count/min/max pipeline: each entry is
-    * (outputName, aggregate builder, merge builder). */
-  def twoPhaseAlgebraic(df: DataFrame, keys: Seq[String], saltCol: Column,
-      buckets: Int,
-      specs: Seq[(String, Column => Column, Column => Column)],
-      valueCols: Seq[String]): DataFrame = {
-    val aggs = specs.zip(valueCols).map { case ((name, f, _), v) =>
-      f(col(v)).as(name)
-    }
-    val merges = specs.map { case (name, _, m) => m(col(name)).as(name) }
-    twoPhaseAgg(df, keys, saltCol, buckets, aggs, merges)
   }
 
   /** Salted equi-join for skewed keys when BOTH sides are too large to

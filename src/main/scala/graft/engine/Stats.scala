@@ -484,16 +484,6 @@ object Stats {
       "batch_id")
   }
 
-  /** Robust per-group outlier statistics via median/MAD (the
-    * outlier-resistant twin of z-score flagging — one extreme value
-    * cannot move the threshold the way it moves a mean/stddev):
-    * med = median(x), mad = median(|x − med|), outlier ⇔ |x − med| > k·mad.
-    *
-    * Two passes by construction (deviations need the median first); each
-    * is one exact-percentile aggregation, and the tiny per-group (med,
-    * mad) table broadcasts back for the flag count. Inherits the exact
-    * `percentile` memory trade-off documented in SCALING.md.
-    * Output: groupCol, n, med, mad (8dp), n_outliers. */
   /** Per-group mode (most frequent value, ties to the smallest value):
     * one (group, value) count aggregation with map-side partials, then an
     * argmax folded into a single `max(struct(cnt, negOrd))`-style
@@ -859,6 +849,16 @@ object Stats {
           .as("max_drift"))
   }
 
+  /** Robust per-group outlier statistics via median/MAD (the
+    * outlier-resistant twin of z-score flagging — one extreme value
+    * cannot move the threshold the way it moves a mean/stddev):
+    * med = median(x), mad = median(|x − med|), outlier ⇔ |x − med| > k·mad.
+    *
+    * Two passes by construction (deviations need the median first); each
+    * is one exact-percentile aggregation, and the tiny per-group (med,
+    * mad) table broadcasts back for the flag count. Inherits the exact
+    * `percentile` memory trade-off documented in SCALING.md.
+    * Output: groupCol, n, med, mad (8dp), n_outliers. */
   def madOutlierStats(df: DataFrame, groupCol: String, valueCol: String,
       k: Double = 3.0): DataFrame = {
     val base = df.select(col(groupCol), col(valueCol).cast("double").as("x"))

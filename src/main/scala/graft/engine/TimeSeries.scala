@@ -304,6 +304,33 @@ object TimeSeries {
         round((sd - mean) / (sd + mean), 8)).as("burstiness"))
   }
 
+  /** Sessionization: the gaps-and-islands window formulation — a
+    * session break is a gap > gapMs from the previous event of the same
+    * user (a gap of exactly gapMs stays in the session); session id =
+    * running count of breaks, and every session closes at the end of the
+    * input. Input: user_id, ts, event_id (the tiebreak), value.
+    * Output: user_id, session_start, session_end, n_events, total_value. */
+  def sessionizeBatch(events: DataFrame, gapMs: Long): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val order = Window.partitionBy(col("user_id"))
+      .orderBy(col("ts"), col("event_id"))
+    val running = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val us = unix_micros(col("ts"))
+    val newSession = when(
+      lag(us, 1).over(order).isNull ||
+        us - lag(us, 1).over(order) > gapMs * 1000L, 1L).otherwise(0L)
+    events
+      .withColumn("__brk", newSession)
+      .withColumn("__sid", sum(col("__brk")).over(running))
+      .groupBy(col("user_id"), col("__sid"))
+      .agg(
+        min(col("ts")).cast("timestamp_ntz").as("session_start"),
+        max(col("ts")).cast("timestamp_ntz").as("session_end"),
+        count(lit(1)).as("n_events"),
+        sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
+      .drop("__sid")
+  }
+
   /** Local-maximum peak detection over an ordered per-group series:
     * points strictly above both neighbors AND above `factor`× the
     * group mean (the prominence floor that keeps noise wiggles out) —

@@ -67,7 +67,7 @@ object Dedup {
     // persist: checkpoint blocks free when the RDD is GC'd after the plan
     // becomes unreachable, while Dataset caches are pinned by the session
     // CacheManager until explicitly unpersisted — a leak for callers that
-    // never get a handle to unpersist (e.g. per-micro-batch use).
+    // never get a handle to unpersist (e.g. per-batch use).
     val sh = shingleSets(docs, idCol, textCol, n).localCheckpoint()
     val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("sz"))
     val a = sh.toDF("id1", "shingle")
@@ -267,8 +267,8 @@ object Dedup {
     *
     * localCheckpoint, not persist — blocks free on RDD GC once the
     * returned plan is unreachable; Dataset caches would pin in the session
-    * CacheManager forever (a per-micro-batch leak for the streaming
-    * ingest path). The set-array side is deliberately NOT broadcast-hinted:
+    * CacheManager forever (a per-batch leak for repeated incremental
+    * dedup). The set-array side is deliberately NOT broadcast-hinted:
     * it is bounded by the candidate doc count, which AQE can still
     * broadcast when small but must stay a shuffle join at corpus scale. */
   private def verifiedOverlap(cand: DataFrame, shRaw: DataFrame,

@@ -28,6 +28,9 @@ import org.apache.spark.sql.functions._
   */
 object Sketches {
 
+  /** HyperLogLog bucket count m. */
+  val HllBuckets = 64
+
   /** 2-hex-char (8-bit) value of `h`'s chars [pos, pos+1], 0..255. */
   private def hexByte(h: Column, pos: Int): Column =
     conv(substring(h, pos, 2), 16, 10).cast("int")
@@ -270,66 +273,6 @@ object Sketches {
       .agg(coalesce(sum(col("na") * col("nb")), lit(0L)).as("exact"))
     inner.crossJoin(exact)
       .select(col("est"), col("exact"), lit(d).as("d"), lit(w).as("w"))
-  }
-
-  // ---- scalar HLL (the same sketch, one value at a time) ----
-  // Used by the STREAMING twin (EventStreams.hllDistinctWindows), whose
-  // per-window state is the 64-byte rho-max array updated row-by-row.
-  // Derivations are kept bit-identical to the Column/SQL forms above so a
-  // streaming window's estimate equals the batch estimate on equal input.
-
-  val HllBuckets = 64
-
-  /** Bucket of a value: first md5 byte of "hllb|v" mod 64. */
-  def hllScalarBucket(v: String): Int =
-    Integer.parseInt(graft.Md5.hex("hllb|" + v).substring(0, 2), 16) % HllBuckets
-
-  /** Scalar twin of [[cmsCounts]]' cell derivation (row r of the sketch):
-    * first md5 byte of "cms<r>|<v>" mod w — kept bit-identical to the
-    * Column form so the STREAMING window sketch
-    * ([[graft.streaming.EventStreams.cmsWindows]]) equals the batch
-    * sketch cell-for-cell on equal input. */
-  def cmsScalarCell(r: Int, v: String, w: Int): Int =
-    Integer.parseInt(graft.Md5.hex("cms" + r + "|" + v).substring(0, 2), 16) % w
-
-  /** rho of a value: leading zero bits of the 64-bit "hllr|v" hash
-    * prefix + 1, clamped to 48 (same clamp as the relational form). */
-  def hllScalarRho(v: String): Int = {
-    val h16 = graft.Md5.hex("hllr|" + v).substring(0, 16)
-    val stripped = h16.dropWhile(_ == '0')
-    val rho =
-      if (stripped.isEmpty) 65
-      else {
-        val nibbleZeros = (16 - stripped.length) * 4
-        val extra = stripped.head match {
-          case '1' => 3
-          case '2' | '3' => 2
-          case '4' | '5' | '6' | '7' => 1
-          case _ => 0
-        }
-        nibbleZeros + extra + 1
-      }
-    math.min(rho, 48)
-  }
-
-  /** Estimate from a 64-slot rho-max array — the identical arithmetic as
-    * the Column form (exact 2^48-scaled integer sum, raw Flajolet
-    * estimate, linear-counting small-range branch). */
-  def hllScalarEstimate(rmax: Array[Byte]): Double = {
-    var s48 = 0L
-    var used = 0L
-    var i = 0
-    while (i < HllBuckets) {
-      if (rmax(i) > 0) { used += 1; s48 += 1L << (48 - rmax(i)) }
-      else s48 += 281474976710656L
-      i += 1
-    }
-    val raw = 0.709 * 64.0 * 64.0 * 281474976710656.0 / s48.toDouble
-    val est =
-      if (raw <= 160.0 && used < HllBuckets)
-        64.0 * math.log(64.0 / (HllBuckets - used).toDouble)
-      else raw
-    BigDecimal(est).setScale(8, BigDecimal.RoundingMode.HALF_UP).toDouble
   }
 
   /** Fixed-bin histogram quantiles per group: the bounded-memory scale

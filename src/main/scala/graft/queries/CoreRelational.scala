@@ -409,7 +409,7 @@ object CoreRelational {
         |FROM mod GROUP BY l_returnflag
         |ORDER BY l_returnflag""".stripMargin)),
 
-    // CDC micro-batch compaction: several changes to one key inside a
+    // CDC batch compaction: several changes to one key inside a
     // batch are legal change-data-capture — keep the LAST by sequence
     // number via a struct-max aggregate (deterministic under any
     // partitioning, unlike dropDuplicates; a window row_number would sort
@@ -423,7 +423,7 @@ object CoreRelational {
           .select(col("o_orderkey"), lit(2L).as("seq"),
             lit("X").as("o_orderstatus"),
             (col("o_totalprice") * 2).as("o_totalprice")))
-      graft.streaming.EventStreams.lastWinsByKey(cdc, Seq("o_orderkey"),
+      Scd.lastWinsByKey(cdc, Seq("o_orderkey"),
           "seq", Seq("o_orderstatus", "o_totalprice"))
         .orderBy("o_orderkey")
     }, Some(

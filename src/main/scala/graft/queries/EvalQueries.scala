@@ -278,8 +278,8 @@ object EvalQueries {
          |         COALESCE(prd.n_pred, 0) AS n_pred
          |  FROM classes
          |  LEFT JOIN tp ON tp.cls = classes.cls
-         |  LEFT JOIN act ON act.cls = classes.cls
-         |  LEFT JOIN prd ON prd.cls = classes.cls)
+         |  LEFT JOIN act ON act.cls IS NOT DISTINCT FROM classes.cls
+         |  LEFT JOIN prd ON prd.cls IS NOT DISTINCT FROM classes.cls)
          |SELECT cls, support, tp, n_pred - tp AS fp,
          |       support - tp AS fn,
          |       CASE WHEN n_pred > 0

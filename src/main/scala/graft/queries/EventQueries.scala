@@ -4,12 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.engine.Tables
+import graft.engine.{Tables, TimeSeries}
 import graft.llm.Multimodal
 
-/** Event-stream (batch view) and multimodal-metadata queries: tumbling
-  * windows over `events` (the batch-equivalent of the Structured Streaming
-  * path in `graft.streaming`), JSON scalar extraction, and binary-payload
+/** Event-log and multimodal-metadata queries: tumbling windows and
+  * sessions over `events`, JSON scalar extraction, and binary-payload
   * metadata over `documents`. */
 object EventQueries {
 
@@ -105,8 +104,7 @@ object EventQueries {
         |                            'f': x.f}).a, 8) AS ewma
         |FROM u ORDER BY user_id""".stripMargin)),
 
-    // Tumbling 1-hour window aggregation (batch form; the streaming form
-    // with watermark lives in graft.streaming.EventStreams).
+    // Tumbling 1-hour window aggregation.
     QuerySpec("q_window_hourly", (s, dir) => {
       events(s, dir)
         .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
@@ -122,11 +120,10 @@ object EventQueries {
         |FROM events GROUP BY date_trunc('hour', ts), event_type
         |ORDER BY hour, event_type""".stripMargin), headline = true),
 
-    // Sliding 1-hour/30-minute windows (batch form of the streaming
-    // sliding aggregation): every event lands in exactly len/slide = 2
-    // windows; the oracle mirrors Spark's epoch-aligned window grid by
-    // exploding each event to its two window starts in exact integer
-    // microsecond arithmetic.
+    // Sliding 1-hour/30-minute windows: every event lands in exactly
+    // len/slide = 2 windows; the oracle mirrors Spark's epoch-aligned
+    // window grid by exploding each event to its two window starts in
+    // exact integer microsecond arithmetic.
     QuerySpec("q_window_sliding", (s, dir) => {
       events(s, dir)
         .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
@@ -149,10 +146,10 @@ object EventQueries {
         |FROM w GROUP BY win_us, event_type
         |ORDER BY win_start, event_type""".stripMargin)),
 
-    // Batch sessionization (gaps-and-islands windows): 30-minute gap
-    // sessions per user over the event stream's batch view.
+    // Sessionization (gaps-and-islands windows): 30-minute gap sessions
+    // per user over the event log.
     QuerySpec("q_sessions_batch", (s, dir) => {
-      graft.streaming.EventStreams.sessionizeBatch(events(s, dir),
+      TimeSeries.sessionizeBatch(events(s, dir),
           gapMs = 30 * 60 * 1000L)
         .orderBy("user_id", "session_start")
     }, Some(

@@ -552,22 +552,6 @@ class EvalSpec extends SparkSpec {
     assert(none.isNullAt(none.fieldIndex("att")))
   }
 
-  test("coverageAgainstIntervals: null outcomes depress coverage instead " +
-      "of vanishing; duplicate interval keys fail loud") {
-    val batch = Seq(("a", Option(50.0)), ("a", Option.empty[Double]),
-      ("a", Option.empty[Double]), ("a", Option(55.0))).toDF("g", "y")
-    val r = Eval.coverageAgainstIntervals(batch, "g", "y",
-      Seq(("a", 50.0, 10.0)), minCoverage = 0.8).head()
-    // 2 of 4 rows inside [40, 60]; the 2 unscoreable rows count against
-    assert(r.getAs[Long]("n") === 4L)
-    assert(r.getAs[Long]("n_covered") === 2L)
-    assert(r.getAs[Double]("coverage") === 0.5)
-    assert(r.getAs[Boolean]("alarm"))
-    intercept[IllegalArgumentException] {
-      Eval.coverageAgainstIntervals(batch, "g", "y",
-        Seq(("a", 50.0, 10.0), ("a", 60.0, 5.0)), minCoverage = 0.8) }
-  }
-
   test("isotonicFit: PAVA pooling via the minimax identity; monotone " +
       "input unchanged") {
     // rates 0.2, 0.6, 0.4 (5 rows each) → the violating pair pools to

@@ -116,6 +116,34 @@ class TimeSeriesSpec extends SparkSpec {
     assert(!r.contains("click"))
   }
 
+  test("sessionizeBatch: only a gap longer than gapMs starts a session") {
+    import java.sql.Timestamp
+    import java.time.LocalDateTime
+    val min = 60000L
+    def ts(ms: Long) = new Timestamp(ms)
+    def at(ms: Long) = LocalDateTime.of(1970, 1, 1, 0, 0).plusNanos(ms * 1000000L)
+    val e = Seq(
+      (1L, ts(1 * min), 10L, 1.0), (2L, ts(3 * min), 10L, 2.0),
+      (3L, ts(40 * min), 10L, 4.0), // 37-min gap → new session
+      (4L, ts(5 * min), 11L, 1.5),
+      (5L, ts(100 * min), 12L, 0.5),
+      (6L, ts(130 * min), 12L, 0.25), // gap of exactly gapMs → same session
+      (7L, ts(160 * min + 1), 12L, 2.5)) // gapMs + 1 ms → new session
+      .toDF("event_id", "ts", "user_id", "value")
+    val r = TimeSeries.sessionizeBatch(e, gapMs = 30 * min)
+      .orderBy("user_id", "session_start")
+      .collect().map(x => (x.getAs[Long]("user_id"),
+        x.getAs[LocalDateTime]("session_start"),
+        x.getAs[LocalDateTime]("session_end"),
+        x.getAs[Long]("n_events"), x.getAs[Double]("total_value"))).toSeq
+    assert(r === Seq(
+      (10L, at(1 * min), at(3 * min), 2L, 3.0),
+      (10L, at(40 * min), at(40 * min), 1L, 4.0),
+      (11L, at(5 * min), at(5 * min), 1L, 1.5),
+      (12L, at(100 * min), at(130 * min), 2L, 0.75),
+      (12L, at(160 * min + 1), at(160 * min + 1), 1L, 2.5)))
+  }
+
   test("bootstrap meanCi: constant values collapse the CI onto the mean") {
     val df = (1 to 40).map(i => ("g", i.toLong, 7.0)).toDF("lbl", "id", "v")
     val r = Bootstrap.meanCi(df, "lbl", "v", col("id"), b = 20).head()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** T1/T9: the reference's casting surface.
+/** T1: the reference's cast inference.
   *
   * T1 (`transform.py:85-102`) — trial-cast ladder: each string column is
   * tried as numeric (after the French `','→'.'` decimal fix); if ANY
@@ -13,9 +13,6 @@ import org.apache.spark.sql.types._
   * comparing `try_cast` success counts against non-null counts in ONE
   * aggregation job over all candidate columns (the reference re-scans per
   * column).
-  *
-  * T9 (`transform.py:272-289`) — declared-schema apply with coercion:
-  * `errors='coerce'` ⇒ unparseable values become null ⇒ `try_cast`.
   *
   * Spark 4 runs in ANSI mode, so plain `cast` throws on bad input;
   * `try_cast` (SQL form — there is no `functions.try_cast`) gives the
@@ -33,8 +30,8 @@ object Cast {
   }
 
   /** T1: decide + apply. Returns the cast frame and the decided pandas-style
-    * dtype per column (feed to `SchemaIO.schemaToDtypeJson` to persist, as
-    * the reference does at `transform.py:394-397`). */
+    * dtype per column (the dtype map the reference persists at
+    * `transform.py:394-397`). */
   def autoCastStringColumns(df: DataFrame): (DataFrame, Map[String, String]) = {
     val strCols = df.schema.fields
       .filter(_.dataType == StringType).map(_.name).toSeq
@@ -71,24 +68,4 @@ object Cast {
     }
     (out, decided)
   }
-
-  /** T9: apply a declared pandas-dtype schema with coercing casts. */
-  def applySchema(df: DataFrame, dtypes: Map[String, String]): DataFrame =
-    dtypes.foldLeft(df) { case (d, (c, dtype)) =>
-      if (!d.columns.contains(c)) d
-      else dtype match {
-        case t if t.startsWith("datetime64") =>
-          d.withColumn(c, tryCastCol(c, "TIMESTAMP"))
-        case "float64" | "float32" | "float" =>
-          d.withColumn(c, expr(s"try_cast(cast(${q(c)} AS STRING) AS DOUBLE)"))
-        case "int64" | "Int64" | "int32" | "int" =>
-          // pandas: to_numeric(coerce).astype('Int64') — via double so "3.0"
-          // parses; the narrowing is ALSO a try_cast (ANSI cast would throw
-          // on values outside long range instead of coercing to null)
-          d.withColumn(c,
-            expr(s"try_cast(try_cast(cast(${q(c)} AS STRING) AS DOUBLE) AS BIGINT)"))
-        case _ =>
-          d.withColumn(c, col(c).cast("string"))
-      }
-    }
 }

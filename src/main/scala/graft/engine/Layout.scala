@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Multi-dimensional data layout: Z-order (Morton) clustering for
@@ -32,43 +32,5 @@ object Layout {
       shiftleft(shiftright(xl, b).bitwiseAND(lit(1L)), 2 * b) +
         shiftleft(shiftright(yl, b).bitwiseAND(lit(1L)), 2 * b + 1)
     }.reduce(_ + _)
-  }
-
-  /** Z-order-clustered parquet write: range-partition into `nFiles` on
-    * the interleaved key, sort within partitions, drop the key. Each
-    * output file then covers one compact tile of (xCol, yCol) space —
-    * the reader prunes by footer min/max on either column. */
-  def zorderWrite(df: DataFrame, xCol: String, yCol: String,
-      nFiles: Int, path: String, bits: Int = 16): Unit =
-    df.withColumn("__z", zValue(col(xCol), col(yCol), bits))
-      .repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
-
-  /** Small-file compaction: rewrite a fragmented table (the residue of
-    * incremental/streaming ingest — thousands of tiny files whose open
-    * and footer cost dominates the scan) into `nFiles` parquet files,
-    * 1-D-clustered on `sortCols` when given so footer min/max prune range
-    * predicates on the leading column ([[zorderWrite]] is the 2-D twin).
-    *
-    * `nFiles` is the caller's target (corpus bytes / desired file size —
-    * the same sizing arithmetic every table-maintenance job does); the
-    * optional `maxRecordsPerFile` caps stragglers when the range
-    * partitioning is skewed. One shuffle, no driver-side row handling. */
-  def compactWrite(df: DataFrame, path: String, nFiles: Int,
-      sortCols: Seq[String] = Nil, maxRecordsPerFile: Long = 0L): Unit = {
-    require(nFiles >= 1, s"compactWrite: nFiles=$nFiles")
-    val arranged =
-      if (sortCols.nonEmpty)
-        df.repartitionByRange(nFiles, sortCols.map(col): _*)
-          .sortWithinPartitions(sortCols.map(col): _*)
-      else df.repartition(nFiles)
-    val writer = arranged.write.mode("overwrite")
-    val capped =
-      if (maxRecordsPerFile > 0L)
-        writer.option("maxRecordsPerFile", maxRecordsPerFile)
-      else writer
-    capped.parquet(path)
   }
 }

@@ -22,6 +22,18 @@ object LoadDedup {
     incoming.join(existingKeys, keys, "left_anti")
   }
 
+  /** The loader's one step per entity (`load.py:123-165,181-212`): the
+    * incoming rows whose key the target (`existing`, None when there is no
+    * target yet) does not hold, deduplicated by key keep-first. Keep-first
+    * needs a total tiebreak order: the key columns alone are constant
+    * within a key partition, so every column, by sorted name, pins which
+    * duplicate survives. Append the result to make the load idempotent. */
+  def newRows(incoming: DataFrame, existing: Option[DataFrame],
+      keys: Seq[String]): DataFrame = {
+    val fresh = existing.fold(incoming)(antiJoinOnKeys(incoming, _, keys))
+    dedupKeepFirst(fresh, keys, orderBy = fresh.columns.sorted.toSeq)
+  }
+
   /** Merge/upsert: the append-only loader's missing half. Rows of
     * `existing` whose key appears in `incoming` are REPLACED by the
     * incoming version (dedup'd keep-first under `orderBy` — explicit, so

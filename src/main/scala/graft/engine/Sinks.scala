@@ -1,10 +1,10 @@
 package graft.engine
 
-import java.util.Properties
-
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
-/** Writers matching the reference's sink surface (SURVEY.md §2 S5/S6/S10). */
+/** Writers matching the reference's sink surface (SURVEY.md §2 S5). The
+  * JSON-lines (S6) and JDBC (S10) sinks are Spark's own writers; the
+  * loader's keep-new-keys step is `LoadDedup.newRows`. */
 object Sinks {
 
   /** S5: gzip parquet, the reference's zone format
@@ -16,24 +16,6 @@ object Sinks {
     val w = df.write.mode(SaveMode.Overwrite).option("compression", "gzip")
     (if (partitionByCols.nonEmpty) w.partitionBy(partitionByCols: _*) else w)
       .parquet(path)
-  }
-
-  /** Dynamic partition overwrite: replace ONLY the partitions present in
-    * `df`, leaving every other partition of the zone untouched — the
-    * re-run/backfill primitive for the medallion layout (re-processing one
-    * `{date}_{batch_id}` never truncates the table, unlike a plain
-    * Overwrite which drops ALL partitions). The mode is a WRITE-SCOPED
-    * option (takes precedence over the session conf), so concurrent
-    * writers on the same session can't race each other into a
-    * whole-table truncation; compression matches the S5 gzip zone format
-    * so backfilled partitions don't diverge from parquetGzip's. */
-  def overwritePartitions(df: DataFrame, path: String,
-      partitionByCols: Seq[String]): Unit = {
-    require(partitionByCols.nonEmpty, "overwritePartitions needs partition columns")
-    df.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .option("compression", "gzip")
-      .partitionBy(partitionByCols: _*).parquet(path)
   }
 
   /** Bucketed + sorted table write: pre-partitions data by join key so
@@ -48,42 +30,4 @@ object Sinks {
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .option("path", path)
       .saveAsTable(tableName)
-
-  /** ORC sink (zlib): format breadth beyond the reference's surface —
-    * interchange with ORC-based warehouses without an extra copy step. */
-  def orc(df: DataFrame, path: String,
-      partitionByCols: Seq[String] = Nil): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite).option("compression", "zlib")
-    (if (partitionByCols.nonEmpty) w.partitionBy(partitionByCols: _*) else w)
-      .orc(path)
-  }
-
-  /** S6: JSON-lines objects (the reference's S3 representation,
-    * `filestorage_helper.py:113-123`). */
-  def jsonLines(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).json(path)
-
-  /** S10: idempotent JDBC append (`load.py:172`): anti-join against the
-    * target's existing keys, then append — the reference's read→dedup→append
-    * shape (`load.py:123-165`) kept, but the anti-join runs distributed. */
-  def jdbcAppendNew(incoming: DataFrame, existing: DataFrame,
-      keys: Seq[String], url: String, table: String,
-      props: Properties): Unit =
-    LoadDedup.antiJoinOnKeys(incoming, existing, keys)
-      .write.mode(SaveMode.Append).jdbc(url, table, props)
-
-  /** FK-ordered idempotent JDBC load (`load.py:181-212`): each entity is
-    * appended-new in the given sequence, so referential-integrity parents
-    * land before their children — the JDBC-literal form of
-    * `EtlPipeline.load`'s parquet stand-in. Tables must already exist
-    * (they carry the PK/FK DDL that makes the ordering matter); each step
-    * reads the target's current keys and anti-joins before appending, so
-    * re-running a batch is a no-op. Entity tuples: (table, rows, keys). */
-  def jdbcLoadOrdered(spark: org.apache.spark.sql.SparkSession, url: String,
-      props: Properties,
-      entities: Seq[(String, DataFrame, Seq[String])]): Unit =
-    entities.foreach { case (table, df, keys) =>
-      jdbcAppendNew(df, Sources.jdbc(spark, url, table, props), keys,
-        url, table, props)
-    }
 }

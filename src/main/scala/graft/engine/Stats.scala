@@ -65,16 +65,11 @@ object Stats {
         .otherwise(lit(Sentinel)).as("t_stat"))
   }
 
-  /** Student-t two-sided p-value; shared by the UDF and the driver-side
-    * `dpeStatistics` path so sentinel/guard logic lives once. */
+  /** Student-t two-sided p-value of the driver-side `dpeStatistics`
+    * path, over the collected group rows. */
   def tTestPValue(t: java.lang.Double, n: Long): Double =
     if (n <= 1 || t == null || t == Sentinel) Sentinel
     else 2.0 * (1.0 - new TDistribution(n - 1.0).cumulativeProbability(math.abs(t)))
-
-  private val tPValue = udf { (t: java.lang.Double, n: Long) => tTestPValue(t, n) }
-
-  def withTTestPValue(stats: DataFrame): DataFrame =
-    stats.withColumn("p_value", tPValue(col("t_stat"), col("sample_size")))
 
   /** A9: Wilcoxon signed-rank W per group, scipy `wilcoxon` semantics
     * (zero_method='wilcox': zero differences dropped; ties mid-ranked;
@@ -196,46 +191,14 @@ object Stats {
           .otherwise(lit(Sentinel)).as("ks_stat"))
   }
 
-  /** KS two-sided p-value: Kolmogorov asymptotic distribution with the
-    * Stephens small-sample correction,
-    * `λ = (√n_e + 0.12 + 0.11/√n_e)·D`, `n_e = n1·n2/(n1+n2)`,
-    * `p = 2·Σ_{j≥1} (−1)^{j−1} e^{−2j²λ²}` (clamped to [0,1]). */
-  def ksPValue(n1: Long, n2: Long, d: Double): Double = {
-    if (n1 < 1 || n2 < 1 || d == Sentinel) return Sentinel
-    val ne = n1.toDouble * n2.toDouble / (n1.toDouble + n2.toDouble)
-    val sq = math.sqrt(ne)
-    val lambda = (sq + 0.12 + 0.11 / sq) * d
-    // below λ≈0.2 the Kolmogorov CDF is < 1e-13 (p = 1) and the
-    // alternating series needs thousands of terms — short-circuit it
-    if (lambda < 0.2) return 1.0
-    val sum = (1 to 100).map(j =>
-      2.0 * math.pow(-1.0, j - 1) * math.exp(-2.0 * j * j * lambda * lambda)).sum
-    math.min(1.0, math.max(0.0, sum))
-  }
-
-  /** Mann-Whitney two-sided p-value: normal approximation with tie
-    * correction, no continuity correction (scipy `method='asymptotic',
-    * use_continuity=False`). Runs on the aggregated group rows. */
-  def mannWhitneyPValue(n1: Long, n2: Long, uStat: Double,
-      tieCounts: Seq[Long]): Double = {
-    if (n1 < 1 || n2 < 1 || uStat == Sentinel) return Sentinel
-    val n = (n1 + n2).toDouble
-    val tieAdj = tieCounts.map(t => t.toDouble * t * t - t).sum / (n * (n - 1))
-    val prod = n1.toDouble * n2.toDouble // Long product would wrap at scale
-    val sigma2 = prod / 12.0 * ((n + 1) - tieAdj)
-    if (sigma2 <= 0) return Sentinel
-    val z = (uStat - prod / 2.0) / math.sqrt(sigma2)
-    2.0 * new NormalDistribution().cumulativeProbability(-math.abs(z))
-  }
-
   /** Chi-square test of independence, cell layer: observed vs expected
     * counts per (rowVal, colVal) with the per-cell χ² contribution.
     * Everything here is per-cell scalar arithmetic over exact integer
     * totals — no floating-point SUM appears in the distributed plan, so
     * the output is bit-deterministic (contributions round to 8 dp); the
-    * statistic and p-value fold the handful of cells driver-side
-    * ([[chiSquareTest]]). Three count aggregations + two broadcast-sized
-    * joins; nothing wider than the contingency table ever shuffles.
+    * statistic is the sum of the handful of cell contributions. Three
+    * count aggregations + two broadcast-sized joins; nothing wider than
+    * the contingency table ever shuffles.
     *
     * Null categories are dropped up front (pandas.crosstab / scipy
     * behavior): groupBy would keep a null key in the marginals, but the
@@ -398,18 +361,6 @@ object Stats {
       .agg(sum(col("term")).as("t"))
       .select(col("n"),
         (col("t").cast("double") / col("n").cast("double")).as("mi"))
-  }
-
-  /** χ² statistic + two-sided p over the collected cells (≤ r×c rows);
-    * recomputes contributions from exact counts in a deterministic cell
-    * order. Returns (chi2, dof, p). */
-  def chiSquareTest(cells: Seq[(Long, Double)], nRows: Int, nCols: Int): (Double, Int, Double) = {
-    val chi2 = cells.map { case (o, e) => val d = o - e; d * d / e }.sum
-    val dof = (nRows - 1) * (nCols - 1)
-    if (dof < 1) return (chi2, dof, Sentinel)
-    val p = 1.0 - new org.apache.commons.math3.distribution
-      .ChiSquaredDistribution(dof.toDouble).cumulativeProbability(chi2)
-    (chi2, dof, p)
   }
 
   /** Wilcoxon two-sided p-value, mirroring scipy's method='auto':

@@ -206,7 +206,7 @@ object Dedup {
     // drops banding false positives whose Jaccard upper bound cannot
     // reach the threshold BEFORE any shingle-set payload exists.
     val sizes = sigSz.select(col(idCol), col("sz"))
-    verifiedJaccard(sizePrefilter(cand, sizes, idCol, threshold), shRaw,
+    verifiedJaccard(sizePrefilter(cand, sizes, threshold), shRaw,
       idCol, threshold)
   }
 
@@ -226,7 +226,7 @@ object Dedup {
     * unfiltered plan (the oracle needs no counterpart — it verifies every
     * candidate and filters on the same rounded threshold). */
   private[graft] def sizePrefilter(cand: DataFrame, sizes: DataFrame,
-      idCol: String, threshold: Double): DataFrame = {
+      threshold: Double): DataFrame = {
     val mn = least(col("sz1"), col("sz2")).cast("double")
     val bound = mn /
       (col("sz1") + col("sz2") - least(col("sz1"), col("sz2"))).cast("double")
@@ -304,8 +304,7 @@ object Dedup {
     // containment 1.0 at ANY size ratio, so no sound size bound exists.
     val pruned = jaccardBound match {
       case Some(t) => sizePrefilter(candCached,
-        sets.select(col(idCol), size(col("shs")).cast("long").as("sz")),
-        idCol, t)
+        sets.select(col(idCol), size(col("shs")).cast("long").as("sz")), t)
       case None => candCached
     }
     pruned
@@ -334,9 +333,8 @@ object Dedup {
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
       n: Int, bands: Int, rowsPerBand: Int,
       minContainment: Double): DataFrame = {
-    val sig = minhashSignatures(docs, idCol, textCol, n, bands * rowsPerBand)
-    val cand = candidatePairsFromBands(lshBands(sig, idCol, bands, rowsPerBand))
-    containmentFromCandidates(cand,
+    containmentFromCandidates(
+      minhashCandidates(docs, idCol, textCol, n, bands, rowsPerBand),
       rawShingles(docs, idCol, textCol, n), idCol, minContainment)
   }
 

@@ -63,26 +63,6 @@ object Multimodal {
     }
   }
 
-  /** Frame/sample selection stub: pick every `stride`-th byte as a stand-in
-    * for frame sampling; a real video path would seek keyframes. */
-  def sampleFrames(payload: Array[Byte], stride: Int): Array[Byte] =
-    payload.indices.collect { case i if i % stride == 0 => payload(i) }.toArray
-
-  /** Resize stub: box-average the payload down to `targetLen` buckets —
-    * the shape (fixed output size, averaging pool) of an image resize,
-    * over opaque bytes since no codecs exist in this environment. */
-  def resize(payload: Array[Byte], targetLen: Int): Array[Double] = {
-    if (payload.isEmpty) return Array.fill(targetLen)(0.0)
-    Array.tabulate(targetLen) { b =>
-      val from = (b.toLong * payload.length / targetLen).toInt
-      val to = (((b + 1).toLong * payload.length) / targetLen).toInt max (from + 1)
-      var s = 0.0
-      var i = from
-      while (i < to) { s += (payload(i) & 0xff); i += 1 }
-      s / (to - from) / 255.0
-    }
-  }
-
   /** Fail-closed guard for JPEG payloads: libjpeg tolerates a truncated
     * scan and pads the missing blocks (probed: 15 of 342 cut points of a
     * 16×16 JPEG decode to a WRONG image with no exception), so unlike
@@ -627,7 +607,6 @@ object Multimodal {
   def decodeMp4(r: MediaRecord): VideoMeta = {
     val b = r.payload
     val bb = java.nio.ByteBuffer.wrap(b) // ISO-BMFF is big-endian
-    var pos = 0
     var brand: String = null
     var timescale = 0L
     var duration = -1L

@@ -36,15 +36,12 @@ object Sampling {
   def uniformHex(seed: String, key: Column): Column =
     substring(md5(concat(lit(s"$seed|"), key.cast("string"))), 1, 8)
 
-  /** Keep ~`fraction` of rows, deterministically by `keyCol`. The same key
-    * is kept or dropped on every run and engine (sample stability under
-    * reruns + joinability of samples across tables sharing the key). */
-  def deterministicSample(df: DataFrame, keyCol: String, fraction: Double,
-      seed: String = "sample"): DataFrame =
-    df.filter(uniformHex(seed, col(keyCol)) < lit(hexThreshold(fraction)))
-
-  /** Stratified variant: per-stratum fractions (e.g. language re-balancing
-    * for a training mix); strata absent from the map keep `default`. */
+  /** Keep ~`fraction` of rows, deterministically by `keyCol`: the same
+    * key is kept or dropped on every run and engine (sample stability
+    * under reruns + joinability of samples across tables sharing the key).
+    * Per-stratum fractions (e.g. language re-balancing for a training mix);
+    * strata absent from the map keep `default`, so an empty map samples
+    * every row at `default`. */
   def stratifiedSample(df: DataFrame, keyCol: String, stratumCol: String,
       fractions: Map[String, Double], default: Double = 0.0,
       seed: String = "sample"): DataFrame = {
@@ -93,8 +90,8 @@ object Sampling {
     * task) and ranks are 64-bit (a running count, not int row_number —
     * no wrap past 2^31 rows). Exact counts inherently serialize per
     * stratum; when a single stratum outgrows one task, use the rate-based
-    * [[deterministicSample]]/[[stratifiedSample]] (map-only) or pre-shard
-    * the stratum and split its count across shards. */
+    * [[stratifiedSample]] (map-only) or pre-shard the stratum and split
+    * its count across shards. */
   def mixToCounts(df: DataFrame, keyCol: String, stratumCol: String,
       counts: Map[String, Long], seed: String = "mix"): DataFrame = {
     require(counts.values.forall(_ >= 0), s"negative count in $counts")
@@ -119,7 +116,7 @@ object Sampling {
     * rate that redistributes a `budget` of rows proportionally to
     * n_s^tau — tau < 1 upweights small strata, tau = 1 keeps natural
     * proportions. Row selection is the same md5-threshold rule as
-    * [[deterministicSample]], so the sample is stable across runs,
+    * [[stratifiedSample]], so the sample is stable across runs,
     * engines and partitionings; rates > 1 saturate (a stratum cannot
     * yield more rows than it has).
     *
@@ -172,7 +169,7 @@ object Sampling {
     * integers (long·long products can overflow at corpus scale — the
     * double product is exact below 2^53 and deterministically rounded
     * beyond, on both engines); inclusion reuses the md5-hex threshold of
-    * [[deterministicSample]], derived in-plan per row.
+    * [[stratifiedSample]], derived in-plan per row.
     *
     * Scale shape: one SUM aggregation, a 1-row broadcast, then a MAP-ONLY
     * filter — no shuffle of the data itself. */

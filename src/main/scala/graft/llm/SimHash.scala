@@ -83,7 +83,4 @@ object SimHash {
     }
     h
   }
-
-  /** Hamming distance between two fingerprints. */
-  def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 }

@@ -27,11 +27,11 @@ import graft.engine._
   * thread each, and each call returns only when all of them have ended:
   *   - `transform`: after cast inference and imputation (in order), every
   *     gold entity write and the statistics branch (collect, then write);
-  *   - `load`: every entity's read → anti-join → dedup → append, each into
-  *     its own target directory. The parquet target has no foreign keys,
-  *     so the reference's FK order (`load.py:181-212`) constrains nothing
-  *     here. A JDBC target with FK constraints must keep that order
-  *     (`Sinks.jdbcLoadOrdered`).
+  *   - `load`: every entity's read → `LoadDedup.newRows` → append, each
+  *     into its own target directory. The parquet target has no foreign
+  *     keys, so the reference's FK order (`load.py:181-212`) constrains
+  *     nothing here. A JDBC target with FK constraints must run the same
+  *     step entity by entity, parents first.
   * The threads inherit the caller's Spark local properties (job group,
   * description, tags) and active session, so cancellation and job
   * attribution by local property cover every job a call starts.
@@ -122,7 +122,7 @@ object EtlPipeline {
       batchId: String,
       entitySpecs: Seq[Entities.EntitySpec] = GoldEntities,
       clock: java.time.Clock = java.time.Clock.systemUTC()): Map[String, DataFrame] = {
-    // 1. casting (T1 inference; a declared schema would use Cast.applySchema)
+    // 1. casting (T1 inference)
     val (cast, _) = Cast.autoCastStringColumns(silver)
 
     // 2. imputation (A1-A4) on the float columns that carry nulls
@@ -141,9 +141,7 @@ object EtlPipeline {
         Derive.absDiff(col("montant_net_ademe"), col("conso_kwh")))
       .withColumn("etiquette", col("o_orderpriority_enedis"))
 
-    // 4. split into gold entities (T7/T8/A10); a reference user passes
-    // SchemaIO.referenceGoldEntities here to drive the original 6-table
-    // gold model from the bundled config
+    // 4. split into gold entities (T7/T8/A10)
     val entities = Entities.splitAll(derived, entitySpecs)
 
     // zone file naming mirrors the reference's `{entity}_{date}_{batch_id}`
@@ -163,9 +161,9 @@ object EtlPipeline {
 
   /** Loader (`load.py:181-212`): idempotent append of each gold entity
     * into the serving store — here a parquet target standing in for the
-    * reference's Postgres (same anti-join-then-append contract as
-    * `Sinks.jdbcAppendNew`). The entities load concurrently; see the
-    * object doc for why no FK order applies. */
+    * reference's Postgres; a JDBC target appends the same
+    * `LoadDedup.newRows` with Spark's JDBC writer. The entities load
+    * concurrently; see the object doc for why no FK order applies. */
   def load(spark: SparkSession, zones: Zones, targetDir: String,
       keys: Map[String, Seq[String]], batchId: String,
       clock: java.time.Clock = java.time.Clock.systemUTC()): Unit = {
@@ -180,17 +178,10 @@ object EtlPipeline {
       // for any non-local URI and break idempotence)
       val targetPath = new org.apache.hadoop.fs.Path(target)
       val fs = targetPath.getFileSystem(spark.sessionState.newHadoopConf())
-      val fresh =
-        if (fs.exists(targetPath)) {
-          val existing = Sources.parquet(spark, target)
-          LoadDedup.antiJoinOnKeys(incoming, existing, keys(entity))
-        } else incoming
-      // deterministic keep-first needs a total tiebreak order: the key
-      // columns alone are constant within a key partition, so order by
-      // every column (sorted) to pin which duplicate survives.
-      val deduped = LoadDedup.dedupKeepFirst(fresh, keys(entity),
-        orderBy = fresh.columns.sorted.toSeq)
-      deduped.write.mode(SaveMode.Append).parquet(target)
+      val existing = Option.when(fs.exists(targetPath))(
+        Sources.parquet(spark, target))
+      LoadDedup.newRows(incoming, existing, keys(entity))
+        .write.mode(SaveMode.Append).parquet(target)
     })
   }
 

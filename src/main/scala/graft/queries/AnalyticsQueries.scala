@@ -136,9 +136,9 @@ object AnalyticsQueries {
 
     // Z-order (Morton) clustering key over part: bit-interleave of
     // partkey and floor(retailprice) — the layout key that makes parquet
-    // min/max stats tight on BOTH dimensions (see Layout.zorderWrite and
-    // LayoutSpec's file-skipping assertion; pure integer bit arithmetic,
-    // replayed exactly by the oracle).
+    // min/max stats tight on BOTH dimensions once a writer range-partitions
+    // on it (see Layout; pure integer bit arithmetic, replayed exactly by
+    // the oracle).
     QuerySpec("q_zorder", (s, dir) => {
       t(s, dir, "part").select(col("p_partkey"),
           Layout.zValue(

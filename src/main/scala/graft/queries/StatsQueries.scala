@@ -346,7 +346,7 @@ object StatsQueries {
     // Mann-Whitney U (unpaired rank-sum) per line status: quantity of
     // returned (R) vs accepted (A) lineitems. Tie-pre-aggregated midranks
     // are exact half-integers, so double sums are associative and the
-    // oracle mirror is bit-exact; p-values stay in StatsSpec.
+    // oracle mirror is bit-exact.
     QuerySpec("q_mannwhitney", (s, dir) => {
       Stats.mannWhitneyStat(t(s, dir, "lineitem"), "l_linestatus",
           "l_quantity", "l_returnflag", a = "A", b = "R")
@@ -651,8 +651,8 @@ object StatsQueries {
 
     // Chi-square contingency cells (returnflag × linestatus): observed,
     // expected, and per-cell contribution from exact integer totals —
-    // no float SUM in the plan, so bit-deterministic; the folded χ²/p
-    // run driver-side over these cells (StatsSpec).
+    // no float SUM in the plan, so bit-deterministic; χ² is their sum
+    // (q_cramers_v).
     QuerySpec("q_chisq_cells", (s, dir) => {
       Stats.chiSquareCells(t(s, dir, "lineitem"), "l_returnflag", "l_linestatus")
         .orderBy("l_returnflag", "l_linestatus")

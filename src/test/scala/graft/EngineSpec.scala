@@ -59,100 +59,9 @@ class CastSpec extends SparkSpec {
     assert(out.schema("allnull").dataType === DoubleType)
     assert(decided("tag") === "string")
   }
-
-  test("applySchema coerces bad values to null (errors='coerce')") {
-    val df = Seq(("x", "12"), ("3.5", "boom")).toDF("f", "i")
-    val out = Cast.applySchema(df, Map("f" -> "float64", "i" -> "Int64"))
-    assert(out.schema("f").dataType === DoubleType)
-    assert(out.schema("i").dataType === LongType)
-    val rows = out.collect()
-    assert(rows.map(r => Option(r.get(0))).toSet === Set(None, Some(3.5)))
-    assert(rows.map(r => Option(r.get(1))).toSet === Set(Some(12L), None))
-  }
 }
 
-class SchemaIOSpec extends SparkSpec {
-  test("pandas dtype JSON round-trips through StructType") {
-    val json = """{"a":"float64","b":"string","c":"int64","d":"datetime64[ns]"}"""
-    val st = SchemaIO.schemaFromDtypeJson(json)
-    assert(st.fields.map(_.dataType).toSeq ===
-      Seq(DoubleType, StringType, LongType, TimestampType))
-    assert(SchemaIO.schemaFromDtypeJson(SchemaIO.schemaToDtypeJson(st)) === st)
-  }
-  test("diffSchemas reports added, removed, and type-changed columns") {
-    val before = SchemaIO.schemaFromDtypeJson(
-      """{"a":"float64","b":"string","c":"int64"}""")
-    val after = SchemaIO.schemaFromDtypeJson(
-      """{"a":"float64","c":"string","d":"int64"}""")
-    val diff = SchemaIO.diffSchemas(before, after)
-    assert(diff.added === Seq("d" -> "bigint"))
-    assert(diff.removed === Seq("b" -> "string"))
-    assert(diff.typeChanged === Seq(("c", "bigint", "string")))
-    assert(!diff.isEmpty)
-    assert(SchemaIO.diffSchemas(before, before).isEmpty)
-  }
-
-  test("reference 229-column silver schema round-trips through the codec") {
-    // the real production dtype map (tests/ressources/schemas/
-    // schema_silver_data.json): 105 float64 / 95 string / 23 int64 /
-    // 6 datetime64[ns]
-    val json = new String(getClass.getResourceAsStream("/schema_silver_data.json")
-      .readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-    val st = SchemaIO.schemaFromDtypeJson(json)
-    assert(st.fields.length === 229)
-    val byType = st.fields.groupBy(_.dataType).view.mapValues(_.length).toMap
-    assert(byType(DoubleType) === 105)
-    assert(byType(StringType) === 95)
-    assert(byType(LongType) === 23)
-    assert(byType(TimestampType) === 6)
-    // round-trip through the pandas-dtype codec is stable
-    val again = SchemaIO.schemaFromDtypeJson(SchemaIO.schemaToDtypeJson(st))
-    assert(again === st)
-    // and the coercing apply accepts a frame carrying a subset of it
-    import spark.implicits._
-    val df = Seq(("12.5", "x")).toDF(st.fields(0).name, "unrelated")
-    val dtypes = SchemaIO.schemaToDtypeJson(st)
-    val parsed = com.fasterxml.jackson.databind.json.JsonMapper.builder().build()
-      .readValue(dtypes, classOf[java.util.LinkedHashMap[String, String]])
-    import scala.jdk.CollectionConverters._
-    val out = Cast.applySchema(df, parsed.asScala.toMap)
-    assert(out.schema(st.fields(0).name).dataType === SchemaIO.toSparkType(
-      parsed.asScala(st.fields(0).name)))
-  }
-
-  test("golden entity config parses cols, defaults, required") {
-    val cfg = """{"schema-adresses": {"cols": {"id_ban": {"type": "string"},
-      "score": {"type": "float64", "default": -1}}, "required": ["id_ban"]}}"""
-    val specs = SchemaIO.entitiesFromConfigJson(cfg)
-    assert(specs.map(_.name) === Seq("adresses"))
-    assert(specs.head.cols.map(_._1) === Seq("id_ban", "score"))
-    assert(specs.head.cols.toMap.apply("score").default === -1.0)
-    assert(specs.head.required === Seq("id_ban"))
-  }
-  test("bundled reference gold-model config parses: 6 entities, full width") {
-    val specs = SchemaIO.referenceGoldEntities
-    assert(specs.map(_.name).toSet === Set("adresses", "logements", "villes",
-      "donnees_climatiques", "donnees_geocodage", "tests_statistiques_dpe"))
-    val byName = specs.map(s => s.name -> s).toMap
-    assert(byName("adresses").cols.size === 5)
-    assert(byName("logements").cols.size === 47)
-    assert(byName("tests_statistiques_dpe").cols.size === 7)
-    val logCols = byName("logements").cols.toMap
-    assert(logCols("conso_kwh_m2").dtype === "float64")
-    assert(logCols("conso_kwh_m2").default === -1.0)
-    assert(logCols("etiquette_dpe_ademe").default === "N/C")
-    // a silver frame missing every declared column still conforms for all
-    // six entities: full declared width, defaults materialized
-    import spark.implicits._
-    val silver = Seq(("x")).toDF("unrelated")
-    specs.foreach { spec =>
-      val gold = Entities.conform(silver, spec)
-      assert(gold.columns.toSeq === spec.cols.map(_._1), spec.name)
-      assert(gold.count() === 1)
-    }
-    assert(Entities.conform(silver, byName("adresses")).head().getString(0) === "N/C")
-  }
-
+class EntitiesSpec extends SparkSpec {
   test("entity conform adds defaults and dedups") {
     import spark.implicits._
     val silver = Seq(("b1", 1.0), ("b1", 1.0), ("b2", 2.0)).toDF("id_ban", "x")

@@ -3,16 +3,15 @@ package graft
 import java.sql.DriverManager
 import java.util.Properties
 
-import org.apache.spark.sql.SaveMode
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SaveMode}
 
-import graft.engine.{Sinks, Sources}
+import graft.engine.LoadDedup
 
 /** S9/S10 end-to-end against a REAL database: embedded Apache Derby (on
-  * Spark's own classpath — it ships Derby for the Hive metastore), so the
-  * JDBC reader/writer and the FK-ordered idempotent load run against actual
-  * SQL DDL, PK/FK constraints, and a second process-visible store — not a
-  * parquet stand-in. Mirrors reference `load.py:123-212`. */
+  * Spark's own classpath — it ships Derby for the Hive metastore), so
+  * Spark's JDBC reader/writer and the loader's `LoadDedup.newRows` step run
+  * against actual SQL DDL, PK/FK constraints, and a second process-visible
+  * store — not a parquet stand-in. Mirrors reference `load.py:123-212`. */
 class JdbcSpec extends SparkSpec {
   import spark.implicits._
 
@@ -32,31 +31,35 @@ class JdbcSpec extends SparkSpec {
     } finally conn.close()
   }
 
+  private def read(table: String): DataFrame = spark.read.jdbc(url, table, props)
+
+  /** The loader's step against a JDBC target: append the batch's new rows. */
+  private def loadNew(table: String, batch: DataFrame, keys: Seq[String]): Unit =
+    LoadDedup.newRows(batch, Some(read(table)), keys)
+      .write.mode(SaveMode.Append).jdbc(url, table, props)
+
   test("S9/S10: write, read back, partitioned read, idempotent append-new") {
     // quoted lowercase DDL column names so Spark's quoted INSERT matches
     ddl("""CREATE TABLE customers ("id" BIGINT PRIMARY KEY, "name" VARCHAR(50))""")
     Seq((1L, "alice"), (2L, "bob")).toDF("id", "name")
       .write.mode(SaveMode.Append).jdbc(url, "customers", props)
 
-    val read1 = Sources.jdbc(spark, url, "customers", props)
+    val read1 = read("customers")
     assert(read1.orderBy("id").collect().map(r => (r.getLong(0), r.getString(1)))
       .toSeq === Seq((1L, "alice"), (2L, "bob")))
 
     // overlapping second batch: only the new key lands
     val batch2 = Seq((2L, "bob"), (3L, "carol")).toDF("id", "name")
-    Sinks.jdbcAppendNew(batch2, Sources.jdbc(spark, url, "customers", props),
-      Seq("id"), url, "customers", props)
-    assert(Sources.jdbc(spark, url, "customers", props).count() === 3)
+    loadNew("customers", batch2, Seq("id"))
+    assert(read("customers").count() === 3)
 
     // idempotence: replaying the same batch appends nothing (and trips no
     // PK violation, because the anti-join removed the dupes first)
-    Sinks.jdbcAppendNew(batch2, Sources.jdbc(spark, url, "customers", props),
-      Seq("id"), url, "customers", props)
-    assert(Sources.jdbc(spark, url, "customers", props).count() === 3)
+    loadNew("customers", batch2, Seq("id"))
+    assert(read("customers").count() === 3)
 
     // S9 partitioned parallel read: same rows, multiple partitions
-    val part = Sources.jdbc(spark, url, "customers", props,
-      partitionColumn = Some(("\"id\"", 0L, 10L, 3)))
+    val part = spark.read.jdbc(url, "customers", "\"id\"", 0L, 10L, 3, props)
     assert(part.rdd.getNumPartitions === 3)
     assert(part.count() === 3)
   }
@@ -79,115 +82,42 @@ class JdbcSpec extends SparkSpec {
     assert(causes(ex).exists(
       _.isInstanceOf[java.sql.SQLIntegrityConstraintViolationException]))
 
-    // FK order loads cleanly…
-    val entities = Seq(
-      ("region_t", regions, Seq("r_id")),
-      ("nation_t", nations, Seq("n_id")))
-    Sinks.jdbcLoadOrdered(spark, url, props, entities)
-    assert(Sources.jdbc(spark, url, "region_t", props).count() === 2)
-    assert(Sources.jdbc(spark, url, "nation_t", props).count() === 2)
+    // FK order (parents first, one load step each) loads cleanly…
+    def loadBatch(): Unit = {
+      loadNew("region_t", regions, Seq("r_id"))
+      loadNew("nation_t", nations, Seq("n_id"))
+    }
+    loadBatch()
+    assert(read("region_t").count() === 2)
+    assert(read("nation_t").count() === 2)
 
     // …and replaying the whole batch is a no-op (anti-join per entity)
-    Sinks.jdbcLoadOrdered(spark, url, props, entities)
-    assert(Sources.jdbc(spark, url, "region_t", props).count() === 2)
-    assert(Sources.jdbc(spark, url, "nation_t", props).count() === 2)
+    loadBatch()
+    assert(read("region_t").count() === 2)
+    assert(read("nation_t").count() === 2)
   }
 
-  test("Postgres dialect maps the 229-col silver dtype schema as declared") {
-    // no server needed: the DDL column list Spark would CREATE TABLE with
-    // is a pure function of (dialect, schema). Derby proves the JDBC
-    // logic end-to-end; this pins the PRODUCTION dialect's type mapping
-    // (reference load.py:128,172 targets Postgres) for every column of
-    // the silver dtype map.
-    import org.apache.spark.sql.types._
-    val json = new String(getClass.getResourceAsStream("/schema_silver_data.json")
-      .readAllBytes(), "UTF-8")
-    val schema = graft.engine.SchemaIO.schemaFromDtypeJson(json)
-    assert(schema.fields.length === 229)
-    val dialect = org.apache.spark.sql.jdbc.JdbcDialects
-      .get("jdbc:postgresql://dbhost/graft")
-    // the exact generator df.write.jdbc uses (public in bytecode; the
-    // enclosing package is sql-private at compile time → reflection)
-    val juCls = Class.forName(
-      "org.apache.spark.sql.execution.datasources.jdbc.JdbcUtils$")
-    val ju = juCls.getField("MODULE$").get(null)
-    val ddl = juCls.getMethod("schemaString",
-        classOf[org.apache.spark.sql.jdbc.JdbcDialect], classOf[StructType],
-        classOf[Boolean], classOf[Option[String]])
-      .invoke(ju, dialect, schema, java.lang.Boolean.FALSE, None)
-      .asInstanceOf[String]
-    val colType = """"([^"]+)"\s+([A-Za-z0-9_()]+)""".r
-      .findAllMatchIn(ddl).map(m => m.group(1) -> m.group(2)).toMap
-    assert(colType.size === 229)
-    // declared dtype -> Postgres DDL type, column by column: float64 ->
-    // FLOAT8 / string -> TEXT (dialect overrides), int64 -> BIGINT /
-    // datetime64[ns] -> TIMESTAMP (common JDBC fallback — the dialect
-    // deliberately doesn't override them)
-    val expected = Map(
-      "float64" -> "FLOAT8", "string" -> "TEXT",
-      "int64" -> "BIGINT", "datetime64[ns]" -> "TIMESTAMP")
-    val dtypes = schema.fields
-      .map(f => f.name -> graft.engine.SchemaIO.toPandasDtype(f.dataType))
-    dtypes.foreach { case (name, dtype) =>
-      assert(colType(name) === expected(dtype),
-        s"$name: $dtype mapped to ${colType(name)}")
-    }
-    // and the dtype census matches FIXTURES.md's documented counts
-    val census = dtypes.groupBy(_._2).view.mapValues(_.size).toMap
-    assert(census === Map("float64" -> 105, "string" -> 95,
-      "int64" -> 23, "datetime64[ns]" -> 6))
-  }
-
-  test("Postgres golden DDL: the exact CREATE-TABLE column list for all " +
-      "6 gold entities, pinned file-for-file") {
-    // The last cheap slice of the no-live-Postgres gap: jdbcLoadOrdered
-    // appends into pre-created tables, and the DDL those tables need is
-    // exactly what Spark's own writer would generate —
-    // JdbcUtils.schemaString(PostgresDialect, entitySchema). This pins
-    // that string for every entity the REAL conform path produces
-    // (empty 229-col silver frame → Entities.conform → schema), so any
-    // drift in the dialect mapping, the entity specs, the dtype→Spark
-    // translation, OR column nullability shows as a golden-file diff.
-    // Regenerate after an intentional schema change:
-    //   GRAFT_REGOLD=1 sbt 'testOnly graft.JdbcSpec' prints the new
-    //   block to paste into src/test/resources/gold_entities_postgres.ddl
-    import org.apache.spark.sql.types._
-    val silverJson = new String(
-      getClass.getResourceAsStream("/schema_silver_data.json")
-        .readAllBytes(), "UTF-8")
-    val silverSchema = graft.engine.SchemaIO.schemaFromDtypeJson(silverJson)
-    val emptySilver = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], silverSchema)
-    val dialect = org.apache.spark.sql.jdbc.JdbcDialects
-      .get("jdbc:postgresql://dbhost/graft")
-    val juCls = Class.forName(
-      "org.apache.spark.sql.execution.datasources.jdbc.JdbcUtils$")
-    val ju = juCls.getField("MODULE$").get(null)
-    val entities = graft.engine.SchemaIO.referenceGoldEntities
-    assert(entities.map(_.name).sorted === Seq("adresses",
-      "donnees_climatiques", "donnees_geocodage", "logements",
-      "tests_statistiques_dpe", "villes"))
-    val rendered = entities.sortBy(_.name).map { spec =>
-      val schema = graft.engine.Entities.conform(emptySilver, spec).schema
-      val ddl = juCls.getMethod("schemaString",
-          classOf[org.apache.spark.sql.jdbc.JdbcDialect],
-          classOf[StructType], classOf[Boolean], classOf[Option[String]])
-        .invoke(ju, dialect, schema, java.lang.Boolean.FALSE, None)
-        .asInstanceOf[String]
-      s"CREATE TABLE ${spec.name} ($ddl);"
-    }.mkString("\n")
-    if (sys.env.contains("GRAFT_REGOLD")) info("\n" + rendered + "\n")
-    val golden = new String(
-      getClass.getResourceAsStream("/gold_entities_postgres.ddl")
-        .readAllBytes(), "UTF-8").trim
-    assert(rendered === golden)
+  test("a batch carrying one new key twice appends one row into a PK table") {
+    ddl("""CREATE TABLE accounts ("id" BIGINT PRIMARY KEY, "name" VARCHAR(20))""")
+    Seq((1L, "alice")).toDF("id", "name")
+      .write.mode(SaveMode.Append).jdbc(url, "accounts", props)
+    // key 2 twice: an anti-join alone would append both rows, and the PK
+    // would reject the whole append
+    val batch = Seq((1L, "alice"), (2L, "bob2"), (2L, "bob")).toDF("id", "name")
+    loadNew("accounts", batch, Seq("id"))
+    def rows = read("accounts").orderBy("id").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq
+    // keep-first under the sorted-column order: ("bob" < "bob2")
+    assert(rows === Seq((1L, "alice"), (2L, "bob")))
+    loadNew("accounts", batch, Seq("id"))
+    assert(rows === Seq((1L, "alice"), (2L, "bob")))
   }
 
   test("upsert round-trip: JDBC-read state, upsert, write back") {
     ddl("""CREATE TABLE kv ("k" BIGINT PRIMARY KEY, "v" VARCHAR(20))""")
     Seq((1L, "old"), (2L, "keep")).toDF("k", "v")
       .write.mode(SaveMode.Append).jdbc(url, "kv", props)
-    val existing = Sources.jdbc(spark, url, "kv", props)
+    val existing = read("kv")
     val incoming = Seq((1L, "new"), (3L, "add")).toDF("k", "v")
     // MATERIALIZE before overwriting the table the plan reads from:
     // Spark truncates the JDBC target before evaluating the lazy plan, so
@@ -198,7 +128,7 @@ class JdbcSpec extends SparkSpec {
     // full-refresh write of the merged state (Overwrite + truncate)
     merged.write.mode(SaveMode.Overwrite).option("truncate", "true")
       .jdbc(url, "kv", props)
-    val got = Sources.jdbc(spark, url, "kv", props).orderBy("k").collect()
+    val got = read("kv").orderBy("k").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(got === Seq((1L, "new"), (2L, "keep"), (3L, "add")))
   }

@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 
 import graft.engine.Layout
 
-/** Z-order layout: interleave correctness and the data-skipping property
-  * it exists for (per-file min/max tiles bound BOTH dimensions). */
+/** Z-order layout: interleave correctness against the reference Morton
+  * bit interleave. */
 class LayoutSpec extends SparkSpec {
   import spark.implicits._
 
@@ -29,77 +29,5 @@ class LayoutSpec extends SparkSpec {
     // consequence of interleaving that makes range pruning sound
     assert(mortonRef(3, 7, 16) < mortonRef(5, 7, 16))
     assert(mortonRef(5, 3, 16) < mortonRef(5, 9, 16))
-  }
-
-  test("zorderWrite produces files whose min/max tiles bound both dims " +
-      "(total bounding area far below a 1-D sort's)") {
-    // a uniform 64x64 grid of (x, y) points
-    val grid = (for { x <- 0 until 64; y <- 0 until 64 }
-      yield (x.toLong, y.toLong)).toDF("x", "y")
-    val dir = java.nio.file.Files.createTempDirectory("graft-zorder")
-    val zPath = s"$dir/z"
-    val xPath = s"$dir/x"
-    Layout.zorderWrite(grid, "x", "y", nFiles = 16, zPath)
-    // 1-D comparison layout: range-partition + sort on x only
-    grid.repartitionByRange(16, col("x")).sortWithinPartitions("x")
-      .write.parquet(xPath)
-
-    // THE skipping metric: how many files does a reader with footer
-    // min/max stats have to touch for a predicate on y ∈ [0, 3]?
-    // x-sorted strips all span the full y range (every file touched);
-    // z-order tiles are compact squares (only the bottom band touched).
-    def filesTouched(path: String): Int = {
-      val files = new java.io.File(path).listFiles()
-        .filter(_.getName.endsWith(".parquet")).map(_.toString).toSeq
-      files.count { f =>
-        val r = spark.read.parquet(f).agg(min("y"), max("y"))
-          .as[(Long, Long)].head()
-        r._1 <= 3L && r._2 >= 0L
-      }
-    }
-    val zTouched = filesTouched(zPath)
-    val xTouched = filesTouched(xPath)
-    assert(xTouched == 16, s"1-D x-sort should touch every file, got $xTouched")
-    assert(zTouched * 2 <= xTouched,
-      s"z-order touched $zTouched of 16 files — no better than 1-D sort")
-    // and the z-ordered table still holds exactly the input rows
-    assert(spark.read.parquet(zPath).count() == 64L * 64)
-  }
-
-  test("compactWrite rewrites a fragmented table into the target file " +
-      "count, clustered so range predicates prune files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact")
-    val fragPath = s"$dir/frag"
-    val compPath = s"$dir/comp"
-    // fragmented ingest residue: 200 partitions of 20 rows each
-    val rows = (1L to 4000L).map(i => (i, s"v$i")).toDF("k", "v")
-    rows.repartition(200).write.parquet(fragPath)
-    val nFrag = new java.io.File(fragPath).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(nFrag >= 100, s"fixture not fragmented: $nFrag files")
-
-    Layout.compactWrite(spark.read.parquet(fragPath), compPath,
-      nFiles = 4, sortCols = Seq("k"))
-    val files = new java.io.File(compPath).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.toString).toSeq
-    assert(files.size == 4, s"expected 4 compacted files, got ${files.size}")
-    // same rows back
-    assert(spark.read.parquet(compPath).as[(Long, String)].collect().toSet
-      === rows.as[(Long, String)].collect().toSet)
-    // clustering: a k-range predicate matches ONE file's min/max footer
-    val touched = files.count { f =>
-      val (lo, hi) = spark.read.parquet(f).agg(min("k"), max("k"))
-        .as[(Long, Long)].head()
-      lo <= 150L && hi >= 100L
-    }
-    assert(touched == 1, s"k in [100,150] should touch 1 of 4 files, got $touched")
-
-    // maxRecordsPerFile caps stragglers: 4000 rows / cap 500 → ≥ 8 files
-    val cappedPath = s"$dir/capped"
-    Layout.compactWrite(spark.read.parquet(fragPath), cappedPath,
-      nFiles = 2, sortCols = Seq("k"), maxRecordsPerFile = 500L)
-    val nCapped = new java.io.File(cappedPath).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(nCapped >= 8, s"cap 500 over 4000 rows should split to ≥8, got $nCapped")
   }
 }

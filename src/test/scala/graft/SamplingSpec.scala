@@ -8,27 +8,29 @@ class SamplingSpec extends SparkSpec {
 
   private lazy val keys = (1L to 2000L).toDF("id")
 
+  // an empty stratum map samples every row at the default fraction
+  private def sample(df: org.apache.spark.sql.DataFrame, fraction: Double,
+      seed: String = "sample") =
+    Sampling.stratifiedSample(df, "id", "id", Map.empty, fraction, seed)
+
   test("fraction edges: 1.0 keeps every row, 0.0 keeps none") {
-    assert(Sampling.deterministicSample(keys, "id", 1.0).count() === 2000L)
-    assert(Sampling.deterministicSample(keys, "id", 0.0).count() === 0L)
+    assert(sample(keys, 1.0).count() === 2000L)
+    assert(sample(keys, 0.0).count() === 0L)
   }
 
   test("sample rate lands near the fraction; invariant under repartitioning") {
-    val picked = Sampling.deterministicSample(keys, "id", 0.5)
-      .as[Long].collect().toSet
+    val picked = sample(keys, 0.5).as[Long].collect().toSet
     assert(math.abs(picked.size - 1000) < 80, s"got ${picked.size}")
-    val repart = Sampling.deterministicSample(keys.repartition(7), "id", 0.5)
-      .as[Long].collect().toSet
+    val repart = sample(keys.repartition(7), 0.5).as[Long].collect().toSet
     assert(repart === picked)
   }
 
   test("smaller fractions are subsets of larger ones (nested thresholds)") {
-    val s25 = Sampling.deterministicSample(keys, "id", 0.25).as[Long].collect().toSet
-    val s50 = Sampling.deterministicSample(keys, "id", 0.5).as[Long].collect().toSet
+    val s25 = sample(keys, 0.25).as[Long].collect().toSet
+    val s50 = sample(keys, 0.5).as[Long].collect().toSet
     assert(s25.subsetOf(s50))
     // a different seed draws a genuinely different subset
-    val other = Sampling.deterministicSample(keys, "id", 0.25, seed = "s2")
-      .as[Long].collect().toSet
+    val other = sample(keys, 0.25, seed = "s2").as[Long].collect().toSet
     assert(other !== s25)
   }
 

@@ -3,8 +3,9 @@
 non-`private`, non-`override` `def` whose name appears in no other
 src/main/scala or perfbench/src file and nowhere else in its own file.
 Comments and string literals are stripped first (the `$x`/`${...}` parts
-of interpolated strings are kept), so a name that only scaladoc or an
-error message mentions has no caller. The scan is by name: an overloaded
+of interpolated strings are kept, string literals nested in a splice
+included), so a name that only scaladoc or an error message mentions has
+no caller. The scan is by name: an overloaded
 or shadowed name counts as called.
 
 Usage: tools/callers.py [repo_root]    (default: the parent of this script's dir)
@@ -16,19 +17,74 @@ import re
 import sys
 from collections import Counter
 
-NOISE = re.compile(r'([A-Za-z_]\w*)?("""[\s\S]*?"""|"(?:\\.|[^"\\\n])*")'
-                   r"|'(?:\\.|[^'\\\n])'|//[^\n]*|/\*[\s\S]*?\*/")
-SPLICE = re.compile(r"\$\{([^}]*)\}|\$([A-Za-z_]\w*)")
+IDENT = re.compile(r"[A-Za-z_]\w*")
+CHAR = re.compile(r"'(?:\\.|[^'\\\n])'")
 DEF = re.compile(r"^[ \t]*((?:(?:@\w+|final|implicit|override|inline"
                  r"|(?:private|protected)(?:\[\w+\])?)[ \t]+)*)def[ \t]+(\w+)", re.M)
 
 
+def scan(text, i=0, splice=False):
+    """Code of text[i:] with comments and string literals blanked; the
+    `$x`/`${...}` parts of interpolated strings are kept, nested literals
+    in a splice included. In a splice, stops after its closing brace.
+    Returns (code, end index)."""
+    out, depth = [], 0
+    while i < len(text):
+        c = text[i]
+        if text.startswith("//", i):
+            j = text.find("\n", i)
+            i = len(text) if j < 0 else j
+        elif text.startswith("/*", i):
+            j = text.find("*/", i + 2)
+            i = len(text) if j < 0 else j + 2
+            out.append(" ")
+        elif c == "'" and (m := CHAR.match(text, i)):
+            i = m.end()
+            out.append(" ")
+        elif c == '"':
+            code, i = literal(text, i, False)
+            out.append(code)
+        elif m := IDENT.match(text, i):
+            if text.startswith('"', m.end()):
+                code, i = literal(text, m.end(), True)
+                out.append(code)
+            else:
+                out.append(m.group())
+                i = m.end()
+        else:
+            if splice and c == "{":
+                depth += 1
+            elif splice and c == "}":
+                if depth == 0:
+                    return "".join(out), i + 1
+                depth -= 1
+            out.append(c)
+            i += 1
+    return "".join(out), i
+
+
+def literal(text, i, interpolated):
+    """The kept code of the string literal at text[i] and its end index."""
+    quote = '"""' if text.startswith('"""', i) else '"'
+    i += len(quote)
+    kept = []
+    while i < len(text) and not text.startswith(quote, i) and \
+            not (quote == '"' and text[i] == "\n"):
+        if quote == '"' and text[i] == "\\":
+            i += 2
+        elif interpolated and text.startswith("${", i):
+            code, i = scan(text, i + 2, True)
+            kept.append(code)
+        elif interpolated and text[i] == "$" and (m := IDENT.match(text, i + 1)):
+            kept.append(m.group())
+            i = m.end()
+        else:
+            i += 2 if interpolated and text.startswith("$$", i) else 1
+    return " " + " ".join(kept) + " ", i + len(quote)
+
+
 def strip(text):
-    def keep(m):
-        if m.group(1) is None or m.group(2) is None:
-            return " "
-        return " ".join(a or b for a, b in SPLICE.findall(m.group(2)))
-    return NOISE.sub(keep, text)
+    return scan(text)[0]
 
 
 def sources(root, tree):

@@ -1,13 +1,17 @@
 #!/bin/bash
 # Interleaved A/B of the perfbench benchmark: a parent revision against this
-# checkout, seed by seed; the side that runs first alternates between pairs.
+# checkout's working tree, seed by seed; the side that runs first alternates
+# between pairs.
 #
 #   tools/perfbench_ab.sh <parent-rev> <workload> <seed>...
 #
-# The parent is exported (git archive) into a temporary directory (under
-# $TMPDIR, default /tmp) that is removed on exit; the build is offline, so
-# the export reuses this checkout's perfbench/.sbt through a symlink. Each
-# run is `python3 perfbench/run.py --seconds 8 --trace 0`. Prints every
+# Both sides are exported the same way, each into its own temporary
+# directory (under $TMPDIR, default /tmp) that is removed on exit, and each
+# builds there from scratch: the parent from `git archive`, the change from
+# a snapshot of the working tree (tracked and untracked files, minus what
+# .gitignore excludes, so no build output of this checkout). The build is
+# offline, so both exports reuse this checkout's perfbench/.sbt through a
+# symlink. Each run is `python3 perfbench/run.py --seconds 8 --trace 0`. Prints every
 # pair's end-to-end metrics with the change's relative delta, then per
 # metric the medians of each side, the parent's interquartile range and the
 # number of pairs in which the change is better.
@@ -19,11 +23,17 @@ if [ $# -lt 3 ]; then
 fi
 REV="$1"; WORKLOAD="$2"; shift 2
 PARENT="$(mktemp -d "${TMPDIR:-/tmp}/perfbench_ab.XXXXXX")"
+CHANGE="$(mktemp -d "${TMPDIR:-/tmp}/perfbench_ab.XXXXXX")"
 RESULTS="$PARENT.jsonl"
-trap 'rm -rf "$PARENT" "$RESULTS"' EXIT
+trap 'rm -rf "$PARENT" "$CHANGE" "$RESULTS"' EXIT
 git -C "$REPO" archive "$(git -C "$REPO" rev-parse "$REV")" | tar -x -C "$PARENT"
+# files deleted from the working tree but still in the index are skipped
+git -C "$REPO" ls-files -co --exclude-standard -z |
+  (cd "$REPO" && xargs -0 sh -c 'for f; do [ ! -e "$f" ] || printf "%s\0" "$f"; done' sh) |
+  tar -C "$REPO" --null -T - -c | tar -x -C "$CHANGE"
 mkdir -p "$REPO/perfbench/.sbt"
 ln -s "$REPO/perfbench/.sbt" "$PARENT/perfbench/.sbt"
+ln -s "$REPO/perfbench/.sbt" "$CHANGE/perfbench/.sbt"
 
 run() {  # <checkout> <side> <seed>: appends {"side","seed",...result} to RESULTS
   local line
@@ -46,9 +56,9 @@ echo "perfbench A/B: parent $(git -C "$REPO" rev-parse --short "$REV")" \
 first=parent
 for seed in "$@"; do
   if [ "$first" = parent ]; then
-    run "$PARENT" parent "$seed"; run "$REPO" change "$seed"; first=change
+    run "$PARENT" parent "$seed"; run "$CHANGE" change "$seed"; first=change
   else
-    run "$REPO" change "$seed"; run "$PARENT" parent "$seed"; first=parent
+    run "$CHANGE" change "$seed"; run "$PARENT" parent "$seed"; first=parent
   fi
   python3 - "$RESULTS" "$seed" <<'PY'
 import json, sys
